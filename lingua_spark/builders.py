@@ -13,7 +13,7 @@ minimum relative distance in 0.0..0.99 (:73).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from . import langdata as L
 
@@ -58,9 +58,7 @@ class LanguageDetectorBuilder:
     languages: tuple[str, ...]
     minimum_relative_distance: float = 0.0
     low_accuracy: bool = False
-    increased_detection_speed: bool = False
     executor_parallelism: int | None = None
-    _preload: bool = field(default=False, repr=False)
 
     # -- factory constructors (LanguageDetectorBuilder.kt:177-283) --------
     @classmethod
@@ -138,11 +136,17 @@ class LanguageDetectorBuilder:
         return self
 
     def with_increased_detection_speed(self) -> "LanguageDetectorBuilder":
-        self.increased_detection_speed = True
+        """No-op kept for reference API parity
+        (LanguageDetectorBuilder.kt:141-144). The reference trades memory
+        for a hash-map lookup; here a dict index measured slower than the
+        sorted ``searchsorted`` lookup on the engine's batches, so there
+        is a single lookup backend (BENCH/BASELINE.md)."""
         return self
 
     def with_preloaded_language_models(self) -> "LanguageDetectorBuilder":
-        self._preload = True
+        """No-op kept for reference API parity: models load once per
+        process through ``resources.packed_models``'s cache, whichever way
+        they are first asked for."""
         return self
 
     def with_executor(
@@ -173,25 +177,13 @@ class LanguageDetectorBuilder:
         )
 
     # -- terminal builders -------------------------------------------------
-    def _models(self):
-        from .resources import packed_models
-
-        pm = packed_models()
-        if self.increased_detection_speed:
-            from .models import DictBackedModels
-
-            return DictBackedModels.from_packed(pm)
-        return pm
-
     def build(self):
         """Per-row detector (the reference's LanguageDetector analog)."""
         from .core.detector import Detector
+        from .resources import packed_models
 
-        models = self._models() if self._preload else None
-        if models is None:
-            models = self._models()  # models load lazily via lru_cache anyway
         return Detector(
-            models=models,
+            models=packed_models(),
             languages=self.languages,
             minimum_relative_distance=self.minimum_relative_distance,
             low_accuracy=self.low_accuracy,
@@ -200,9 +192,10 @@ class LanguageDetectorBuilder:
     def build_batch(self):
         """Vectorized batch detector (what the Spark UDFs run)."""
         from .engine.batch import BatchDetector
+        from .resources import packed_models
 
         return BatchDetector(
-            models=self._models(),
+            models=packed_models(),
             languages=self.languages,
             minimum_relative_distance=self.minimum_relative_distance,
             low_accuracy=self.low_accuracy,
@@ -216,5 +209,4 @@ class LanguageDetectorBuilder:
             languages=self.languages,
             minimum_relative_distance=self.minimum_relative_distance,
             low_accuracy=self.low_accuracy,
-            increased_detection_speed=self.increased_detection_speed,
         )

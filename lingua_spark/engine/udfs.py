@@ -26,6 +26,7 @@ from .. import langdata as L
 from ..core.detector import Detector
 from ..ftlangid import FastTextish
 from ..quality import QualityConfig
+from ..resources import fasttextish, packed_models
 
 ASSESS_SCHEMA = StructType(
     [
@@ -121,28 +122,12 @@ def unload_models(spark: SparkSession) -> int:
     return n
 
 
-def _models_for(config: QualityConfig):
-    """Select the frequency-lookup backend per the builder flag (U4's
-    withIncreasedDetectionSpeed): the dict index is built driver-side and
-    rides the same broadcast as the packed arrays."""
-    from ..resources import packed_models
-
-    pm = packed_models()
-    if config.increased_detection_speed:
-        from ..models import DictBackedModels
-
-        return DictBackedModels.from_packed(pm)
-    return pm
-
-
 def make_assess_udf(spark: SparkSession, config: QualityConfig | None = None):
     """Returns a pandas UDF text -> assessment struct, models broadcast once."""
-    from ..resources import fasttextish
-
     ship_package(spark)
     config = config or QualityConfig()
     bc = spark.sparkContext.broadcast(
-        (_models_for(config), fasttextish().weights, config)
+        (packed_models(), fasttextish().weights, config)
     )
     _LIVE_BROADCASTS.append(bc)
 
@@ -180,7 +165,7 @@ def make_multilang_udf(spark: SparkSession, config: QualityConfig | None = None)
     LanguageSection structs."""
     ship_package(spark)
     config = config or QualityConfig()
-    bc = spark.sparkContext.broadcast((_models_for(config), config))
+    bc = spark.sparkContext.broadcast((packed_models(), config))
     _LIVE_BROADCASTS.append(bc)
 
     @F.pandas_udf(SECTION_SCHEMA)
@@ -223,7 +208,7 @@ def make_detect_udf(spark: SparkSession, config: QualityConfig | None = None):
     """Detection-only UDF (U1/U2 analog): text -> (lang, confidence, map)."""
     ship_package(spark)
     config = config or QualityConfig()
-    bc = spark.sparkContext.broadcast((_models_for(config), config))
+    bc = spark.sparkContext.broadcast((packed_models(), config))
     _LIVE_BROADCASTS.append(bc)
 
     @F.pandas_udf(DETECT_SCHEMA)

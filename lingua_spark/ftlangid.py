@@ -97,49 +97,15 @@ class FastTextish:
     def predict_ords(self, cleaned_list: list[str]) -> np.ndarray:
         """Per-row prediction for a batch of already-cleaned texts.
 
-        Deliberately a plain loop: a batched variant (cross-row bucket
-        blob + one large weight gather per ~250k windows) was built and
-        MEASURED 15x SLOWER in this environment — large fancy-index
-        gathers / fresh temporaries pay a pathological first-touch
-        page-fault cost (~0.6 ms/page, ~100x normal), while the per-row
-        (windows, N_LANGUAGES) gathers stay in warm allocator pages. See
-        BENCH/BASELINE.md."""
+        Deliberately a plain loop. A cross-row blob variant (one bucket
+        stream, one weight gather, per-row ``np.add.reduceat`` sums) was
+        measured against it in-process on 3,000 ``corpus.transcripts``
+        turns, single core: 112-142 ms/krow for the blob against 52-68
+        for this loop, and the blob's sum order could flip argmax on
+        near-ties. It was deleted; see BENCH/BASELINE.md."""
         out = np.full(len(cleaned_list), -1, dtype=np.int64)
         for i, c in enumerate(cleaned_list):
             out[i] = self.predict_ord_cleaned(c)
-        return out
-
-    def predict_ords_vectorized(self, cleaned_list: list[str]) -> np.ndarray:
-        """Cross-row blob variant of predict_ords: one concatenated bucket
-        stream, one weight gather, per-row segment sums via reduceat.
-
-        Kept behind QualityConfig.vectorized_batch_scoring (default off):
-        in THIS environment the large fresh gather pays a pathological
-        first-touch page-fault cost and measures slower than the per-row
-        loop (see BENCH/BASELINE.md), but on a normally-behaving host the
-        blob shape is the conventional winner — the flag lets a real
-        cluster re-measure without a code change. Prediction parity with
-        predict_ords is TOLERANCE-LEVEL, not bit-level (ADVICE r03):
-        per-row scores use ndarray.sum's pairwise tree while this path
-        uses np.add.reduceat's strict left-to-right segment sums, so the
-        float accumulation order differs and argmax can flip on exact
-        near-ties for long inputs. The pinned tests
-        (tests/test_quality.py) cover small fixtures; treat the flag as
-        an approximation switch, not a gated-correctness equivalence."""
-        out = np.full(len(cleaned_list), -1, dtype=np.int64)
-        bucket_arrays = [_buckets(c) for c in cleaned_list]
-        sizes = np.array([b.size for b in bucket_arrays], dtype=np.int64)
-        nonempty = np.flatnonzero(sizes > 0)
-        if nonempty.size == 0:
-            return out
-        blob = np.concatenate([bucket_arrays[i] for i in nonempty]).astype(
-            np.int64
-        )
-        g = self.weights[blob].astype(np.float64)  # (total_windows, N_LANG)
-        starts = np.zeros(nonempty.size, dtype=np.int64)
-        starts[1:] = np.cumsum(sizes[nonempty])[:-1]
-        sums = np.add.reduceat(g, starts, axis=0)
-        out[nonempty] = np.argmax(sums, axis=1)
         return out
 
     def predict(self, text: str) -> str:

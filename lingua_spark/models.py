@@ -221,81 +221,6 @@ class PackedModels:
         )
 
 
-@dataclass
-class DictBackedModels:
-    """Alternative lookup backend — the ``withIncreasedDetectionSpeed``
-    trade (`api/LanguageDetectorBuilder.kt:141-144`,
-    `internal/model/lookup/UniBiTrigramLookup.kt:216-225`): swap the
-    sorted-array binary search for a prebuilt hash-dict index (more driver
-    memory, O(1) per probe). Returns values identical to
-    ``PackedModels.lookup`` — same freqs matrices, same miss semantics —
-    so every parity test holds on both backends (tests/test_parity.py).
-
-    Benchmark verdict (BENCH/BASELINE.md): on this environment the
-    vectorized ``np.searchsorted`` path is FASTER for the batch sizes the
-    engine actually issues (hundreds-to-thousands of probes per call),
-    because the dict path pays a per-element Python round trip. The
-    ``QualityConfig.increased_detection_speed`` flag therefore selects
-    this backend only for API parity; the default is the measured winner.
-    """
-
-    base: PackedModels
-    index: dict[tuple[int, str], dict[int, int]]  # (n, group) -> hash -> row
-
-    @classmethod
-    def from_packed(cls, base: PackedModels) -> "DictBackedModels":
-        index = {
-            key: {int(h): i for i, h in enumerate(keys)}
-            for key, keys in base.keys.items()
-        }
-        return cls(base=base, index=index)
-
-    def lookup(
-        self, n: int, hashes: np.ndarray, cols: np.ndarray | None = None
-    ) -> np.ndarray:
-        ncols = L.N_LANGUAGES if cols is None else len(cols)
-        out = np.zeros((hashes.size, ncols), dtype=np.float32)
-        if hashes.size == 0:
-            return out
-        if cols is None:
-            col_groups = {
-                g: list(g_ords) for g, g_ords in self.base.groups.items()
-            }
-            cols_arr = np.arange(L.N_LANGUAGES, dtype=np.int64)
-        else:
-            cols_arr = cols
-            col_groups = {}
-            for pos, o in enumerate(cols):
-                col_groups.setdefault(
-                    self.base.group_of[int(o)], []
-                ).append(pos)
-        for g, pos_list in col_groups.items():
-            idx = self.index.get((n, g))
-            if not idx:
-                continue
-            rows = np.fromiter(
-                (idx.get(int(h), -1) for h in hashes),
-                dtype=np.int64,
-                count=hashes.size,
-            )
-            found = rows >= 0
-            if not found.any():
-                continue
-            rows_c = np.maximum(rows, 0)
-            sel = np.array(pos_list, dtype=np.int64)
-            local = self.base.local_col[g][cols_arr[sel]]
-            sub = self.base.freqs[(n, g)][rows_c[:, None], local[None, :]]
-            out[:, sel] = np.where(found[:, None], sub, np.float32(0.0))
-        return out
-
-    def nbytes(self) -> int:
-        import sys
-
-        return self.base.nbytes() + sum(
-            sys.getsizeof(d) for d in self.index.values()
-        )
-
-
 def to_oracle_dicts(df: pd.DataFrame) -> dict[str, dict[int, dict[str, float]]]:
     """lang -> n -> ngram -> float32 frequency (pure-Python oracle form)."""
     out: dict[str, dict[int, dict[str, float]]] = {}

@@ -72,14 +72,9 @@ SELECT doc_id, s AS simhash
 FROM (SELECT doc_id, lingua_simhash(text) AS s FROM documents)
 WHERE s IS NOT NULL
 """
-    if dialect == "never":
-        words = (
-            "SELECT doc_id, explode(" + _tokens("spark") + ") AS w FROM documents"
-        )
-    else:
-        words = (
-            "SELECT doc_id, unnest(" + _tokens("duckdb") + ") AS w FROM documents"
-        )
+    words = (
+        "SELECT doc_id, unnest(" + _tokens("duckdb") + ") AS w FROM documents"
+    )
     bit_sums = ", ".join(
         "sum(CASE WHEN (instr('0123456789abcdef', substring(h, {j}, 1)) - 1) % 2 = 1"
         " THEN 1 ELSE -1 END) AS b{j}".format(j=j)
@@ -96,18 +91,16 @@ SELECT doc_id, CAST({sim_expr} AS BIGINT) AS simhash FROM bits
 """
 
 
-def _minhash_sig(
-    dialect: str, k: int = 5, n_hashes: int = 8, src: str = "documents"
-) -> str:
+def _minhash_sig(dialect: str, k: int = 5, src: str = "documents") -> str:
     """MinHash signatures over 8-hex-char lanes sliced from md5 digests.
 
     Instead of one md5 per (hash index, shingle) — 8 digests per shingle,
     which profiled as ~90% of the whole LSH query at sf0.1 — each shingle
-    is digested ceil(n_hashes/4) times (salted '~'-prefix for the second
-    digest) and each 32-hex digest is cut into four independent 8-hex
-    lanes. The lexicographic min over fixed-length hex equals the numeric
-    min, so each lane is a valid 32-bit minhash permutation. Identical
-    SQL semantics in both dialects (substr is 1-indexed in both).
+    is digested twice (salted '~'-prefix for the second digest) and each
+    32-hex digest is cut into four independent 8-hex lanes. The
+    lexicographic min over fixed-length hex equals the numeric min, so
+    each lane is a valid 32-bit minhash permutation. Spark computes the
+    same 8 lanes in the ``lingua_minhash_sig`` Arrow kernel.
 
     Docs whose CLEANED text is NULL or empty are excluded: an empty
     shingle set has no minhash signature, and the degenerate keys would
@@ -123,21 +116,16 @@ def _minhash_sig(
     giant-bucket failure this guard exists to exclude, invisible to the
     oracle gate because both engines would agree)."""
     c = _cleaned(dialect)
-    sh = _shingles(dialect, "c", k)
     nonempty = "WHERE length(trim(coalesce(c, ''))) >= 1"
-    n_digests = (n_hashes + 3) // 4
-    digests = ", ".join(
-        f"md5({'s' if d == 0 else repr('~' * d) + ' || s'}) AS m{d}"
-        for d in range(n_digests)
-    )
-    if dialect == "spark" and n_hashes == 8:
+    if dialect == "spark":
         # registered Arrow kernel (see _make_minhash_sig_udf): cleaning
         # stays the JVM regex; the kernel slices shingles, memoizes the
-        # two md5 digests per DISTINCT shingle across the whole task
-        # (Zipf vocabulary -> high hit rate) and returns the 8 lane
-        # minima directly. One corpus scan, no per-occurrence string
-        # churn; measured 4.9 -> 1.x s at sf0.1 for the bare signature
-        # vs the explode + 2-md5/occurrence expression chain.
+        # two md5 digests per DISTINCT shingle for one Arrow batch (the
+        # memo is made per batch; Zipf vocabulary -> high hit rate) and
+        # returns the 8 lane minima directly. One corpus scan, no
+        # per-occurrence string churn; measured 4.9 -> 1.x s at sf0.1
+        # for the bare signature vs the explode + 2-md5/occurrence
+        # expression chain.
         # GROUP BY stays: the conversation path presents one row per
         # TURN under a shared key and the signature is the min over the
         # UNION of turn shingle sets — min of per-row minima. For the
@@ -150,21 +138,16 @@ def _minhash_sig(
             f" FROM (SELECT doc_id, {c} AS c FROM {src})"
             f" {nonempty}) GROUP BY doc_id"
         )
-    if dialect == "spark":
-        shingled = (
-            f"SELECT doc_id, {digests} FROM (SELECT doc_id, explode({sh})"
-            f" AS s FROM (SELECT doc_id, {c} AS c FROM {src})"
-            f" {nonempty})"
-        )
-    else:
-        shingled = (
-            f"SELECT doc_id, {digests} FROM (SELECT doc_id, unnest({sh})"
-            f" AS s FROM (SELECT doc_id, {c} AS c FROM {src})"
-            f" {nonempty})"
-        )
+    sh = _shingles(dialect, "c", k)
+    shingled = (
+        "SELECT doc_id, md5(s) AS m0, md5('~' || s) AS m1"
+        f" FROM (SELECT doc_id, unnest({sh})"
+        f" AS s FROM (SELECT doc_id, {c} AS c FROM {src})"
+        f" {nonempty})"
+    )
     mins = ", ".join(
         f"min(substr(m{(i - 1) // 4}, {1 + 8 * ((i - 1) % 4)}, 8)) AS h{i}"
-        for i in range(1, n_hashes + 1)
+        for i in range(1, 9)
     )
     return f"WITH sh AS ({shingled}) SELECT doc_id, {mins} FROM sh GROUP BY doc_id"
 
@@ -330,12 +313,13 @@ def _jaccard_pairs(dialect: str) -> str:
         # shingle rewrite was tried here and REVERTED — a same-session
         # interleaved A/B at sf0.1 (3 reps each, noop sink) measured the
         # lateral form ~25% SLOWER than this HOF form for this query
-        # (old 4.11/4.40/5.04 s vs new 5.24/5.34/5.54 s): the shingle
-        # subtree is re-evaluated 3x here, and the sequence-explode
-        # Generate emits one row per position BEFORE the DISTINCT,
-        # tripling the pre-aggregation row count, which outweighs the
-        # HOF's CodegenFallback cost. The DF twin materializes shingles
-        # once, where the codegen slicing does win (see
+        # (old 4.11/4.40/5.04 s vs new 5.24/5.34/5.54 s). Both forms
+        # emit the same one row per position before the DISTINCT, so
+        # the difference is plan and codegen shape, not row count: the
+        # shingle subtree is re-evaluated 3x here, and the lateral
+        # Generate + substring plan cost more per evaluation than the
+        # HOF's CodegenFallback array build. The DF twin materializes
+        # shingles once, where the codegen slicing does win (see
         # jaccard_pairs_df).
         return f"""
 WITH sh AS (
@@ -1438,7 +1422,8 @@ def _fingerprint_winnow(dialect: str, k: int = 5, w: int = 4) -> str:
         # round 6: the per-row array winnow (two HOF transforms + one
         # md5 per POSITION, all CodegenFallback) is replaced by the
         # registered memoizing Arrow kernel (_make_winnow_udf) — same
-        # definition, md5 computed once per DISTINCT shingle per task
+        # definition, md5 computed once per DISTINCT shingle per Arrow
+        # batch
         return f"""
 SELECT doc_id, explode(lingua_winnow(c, {k}, {w})) AS fingerprint
 FROM (SELECT doc_id, {c} AS c FROM documents)
@@ -1675,7 +1660,7 @@ FROM tstat t LEFT JOIN bstat b ON t.doc_id = b.doc_id
 """
 
 
-def _gopher_repetition(dialect: str) -> str:
+def _gopher_repetition() -> str:
     """Gopher repetition-removal metric family (Rae et al. 2021 §A1.1,
     public paper) — the half ``gopher_quality`` doesn't cover: per-doc
     top-n-gram character fraction for n=2..4 and duplicate-n-gram
@@ -1690,47 +1675,24 @@ def _gopher_repetition(dialect: str) -> str:
     cross-multiplications — no float thresholds in the gate, so the
     verdict is immune to rounding.
 
-    Scale shape: ONE nested-transform explode emits all TEN n values
-    tagged (n, gram) — unigrams included, so the per-doc character base
-    is Σ c·len over the n=1 rows and the whole query is ONE corpus scan
-    with no join back to a token base (vs gopher_quality's two explode
-    subtrees) — then a map-side-combinable (doc, n, gram) count, a
-    (doc, n) aggregate, and a 10-way conditional-aggregation pivot. No
-    windows, no joins. Docs with ZERO tokens (empty/whitespace text)
-    emit no row — they have no unigram; every ≥1-token doc appears,
-    with all-zero fractions when shorter than every gated n."""
-    toks = _tokens(dialect)
-    if dialect == "spark":
-        # the struct carries (n, xxhash64(gram), nonspace-len) — never the
-        # gram STRING: the explode output and the (doc,n,gram)-grained
-        # exchange shrink to 4 fixed-width ints/longs per occurrence (the
-        # dedup_exact_flags trick). The aggregates only need each distinct
-        # gram's count and char length, both hash-representation-free; a
-        # 64-bit in-doc collision (~10^3 grams/doc) is negligible and
-        # deterministic. The DuckDB oracle groups by the string itself, so
-        # hash-parity of the OUTPUT also audits the collision assumption.
-        structs = ",\n      ".join(
-            "transform("
-            + (_word_ngrams("spark", "t", n) if n > 1 else "t")
-            + f", x -> named_struct('n', {n}, 'gh', xxhash64(x),"
-            f" 'glen', length(x) - {n - 1}))"
-            for n in range(1, 11)
-        )
-        base = f"""
-keyed AS (
-  SELECT doc_id, inline(gs) FROM (
-    SELECT doc_id, concat(
-      {structs}) AS gs
-    FROM (SELECT doc_id, {toks} AS t FROM documents))
-)"""
-    else:
-        arms = "\n  UNION ALL ".join(
-            f"SELECT doc_id, {n} AS n, unnest("
-            + (_word_ngrams("duckdb", "t", n) if n > 1 else "t")
-            + ") AS gram FROM tok"
-            for n in range(1, 11)
-        )
-        base = f"""
+    This is the DuckDB oracle text of ``gopher_repetition_sql``; the
+    Spark side is ``_gopher_repetition_spark`` (an Arrow kernel over the
+    same definition). Shape: ten UNION ALL unnest arms emit every n
+    value tagged (n, gram) — unigrams included, so the per-doc character
+    base is Σ c·len over the n=1 rows with no join back to a token base
+    — then a (doc, n, gram) count, a (doc, n) aggregate, and a 10-way
+    conditional-aggregation pivot. No windows, no joins. Docs with ZERO
+    tokens (empty/whitespace text) emit no row — they have no unigram;
+    every ≥1-token doc appears, with all-zero fractions when shorter
+    than every gated n."""
+    toks = _tokens("duckdb")
+    arms = "\n  UNION ALL ".join(
+        f"SELECT doc_id, {n} AS n, unnest("
+        + (_word_ngrams("duckdb", "t", n) if n > 1 else "t")
+        + ") AS gram FROM tok"
+        for n in range(1, 11)
+    )
+    base = f"""
 tok AS (SELECT doc_id, {toks} AS t FROM documents),
 exploded AS (
   {arms}
@@ -1805,8 +1767,9 @@ _GOPHER_REP_MASS_SCHEMA = (
 
 
 def _gopher_tok_hasher():
-    """Per-task token -> md5-derived 64-bit hash with a memo cache (the
-    token vocabulary is Zipfian, so the cache hit rate is high)."""
+    """Token -> md5-derived 64-bit hash with a memo cache. Callers make
+    one per Arrow batch, so the memo lives for one batch, not the task
+    (the token vocabulary is Zipfian, so the hit rate is high)."""
     import hashlib
 
     cache: dict[str, int] = {}
@@ -1952,8 +1915,8 @@ def _make_minhash_sig_udf():
     distinct shingle set equals min over the multiset, so the in-doc
     dedup is a pure optimization. hashlib.md5 is OpenSSL; the win over
     the JVM expression chain is the CROSS-DOC shingle memo (Zipfian
-    shingle vocabulary — boilerplate shingles hash once per task, not
-    once per occurrence) plus skipping 10 per-occurrence string
+    shingle vocabulary — boilerplate shingles hash once per Arrow batch,
+    since the memo is made in the UDF body, not once per occurrence) plus skipping 10 per-occurrence string
     allocations. Python str slicing and min() are code-point /
     bytewise-ASCII semantics, identical to Spark substring/min on hex."""
     import hashlib
@@ -2011,7 +1974,8 @@ def _make_winnow_udf():
     windows, dedup), including its degenerate edges: NULL text yields
     the single element NULL (md5(NULL) is NULL) and a short text yields
     the md5 of its whole remainder. Same win as the minhash kernel: the
-    md5 digest per DISTINCT shingle is memoized across the task, and no
+    md5 digest per DISTINCT shingle is memoized for one Arrow batch (the
+    memo is made in the UDF body), and no
     per-position string churn reaches the JVM expression interpreter."""
     import hashlib
 
@@ -2084,7 +2048,8 @@ def _make_simhash_udf():
     those — callers filter NULLs). Same definition as the SQL: bit j is
     set iff the sum over word OCCURRENCES of +/-1 (parity of the j-th
     hex nibble of md5(word)) is positive. The per-word +/-1 vector is
-    md5-derived and memoized across the task (Zipf vocabulary); token
+    md5-derived and memoized for one Arrow batch (the memo is made in
+    the UDF body; Zipf vocabulary); token
     split is the ``_tokens`` semantics (lower, trim spaces, split on
     runs of spaces) — the same Python twin the repetition kernel uses,
     oracle-parity-tested at every sf."""
@@ -3188,7 +3153,7 @@ SQL_QUERIES["gopher_quality"] = (
 )
 SQL_QUERIES["gopher_repetition_sql"] = (
     _gopher_repetition_spark(),
-    _gopher_repetition("duckdb"),
+    _gopher_repetition(),
 )
 SQL_QUERIES["decontaminate_ngram"] = (
     _decontaminate("spark"),

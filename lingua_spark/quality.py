@@ -105,86 +105,19 @@ def trigram_perplexity_batch(
 ) -> np.ndarray:
     """Per-row perplexity for a batch; ``lang_ords[i] < 0`` -> inf.
 
-    Deliberately a plain loop: a cross-row blob variant (one concatenated
-    window stream + three batched lookups) was built and MEASURED 3.6x
-    SLOWER in this environment — large fresh NumPy temporaries pay a
-    pathological first-touch page-fault cost (~0.6 ms/page measured,
-    ~100x normal), so big gather outputs lose to small per-row working
-    sets that stay in warm allocator pages. See BENCH/BASELINE.md."""
+    Deliberately a plain loop over trigram_perplexity, so every value is
+    bit-identical to the per-row path. A grouped blob variant (rows of
+    one language concatenated, one lookup per depth, per-row means via
+    ``np.add.reduceat``) was measured in-process on 3,000
+    ``corpus.transcripts`` turns, single core, at 38-47 ms/krow against
+    66-80 for this loop. It was deleted because its segment sums run in a
+    different float order and so only match to tolerance. A bit-identical
+    grouped form (per-row ``.mean()`` over slices of one blob) is an open
+    lead; see BENCH/BASELINE.md."""
     out = np.full(len(cleaned_list), np.inf, dtype=np.float64)
     for i, (c, o) in enumerate(zip(cleaned_list, lang_ords)):
         if o >= 0:
             out[i] = trigram_perplexity(c, o, models)
-    return out
-
-
-def _perplexity_windows(cleaned: str):
-    """(h1,h2,h3) hash columns of the valid trigram windows, or None."""
-    codes = codes_of(cleaned)
-    letters = cat_ids(codes) == CAT_LETTER
-    if len(codes) < 3:
-        return None
-    from .core.ngram import _NP_OFFSET, _NP_PRIME
-
-    n = len(codes)
-    cu = codes.astype(np.uint64)
-    with np.errstate(over="ignore"):
-        h1 = (np.uint64(_NP_OFFSET) ^ cu) * np.uint64(_NP_PRIME)
-        h2 = (h1[: n - 1] ^ cu[1:]) * np.uint64(_NP_PRIME)
-        h3 = (h2[: n - 2] ^ cu[2:]) * np.uint64(_NP_PRIME)
-    valid = letters[: n - 2] & letters[1 : n - 1] & letters[2:]
-    if not valid.any():
-        return None
-    return np.column_stack((h1[: n - 2][valid], h2[: n - 2][valid], h3[valid]))
-
-
-def trigram_perplexity_batch_vectorized(
-    cleaned_list: list[str],
-    lang_ords: list[int],
-    models: PackedModels,
-) -> np.ndarray:
-    """Grouped-by-language blob variant of trigram_perplexity_batch: rows
-    sharing a detected language concatenate their windows, so each
-    (depth, language) pair costs ONE searchsorted lookup instead of one
-    per row. Behind QualityConfig.vectorized_batch_scoring — measured
-    slower HERE (first-touch page-fault pathology, BENCH/BASELINE.md) but
-    the conventional winner on a normal host. Parity with the per-row
-    path is TOLERANCE-LEVEL, not bit-level (ADVICE r03): the per-row
-    path means logp via a pairwise-tree sum while this path segments one
-    blob with np.add.reduceat (strict left-to-right), so float ordering
-    differs and perplexities can diverge in the last ulps on long
-    inputs. Pinned to small fixtures + np.allclose by
-    tests/test_quality.py; do NOT rely on this flag for bit-identical
-    gated comparisons."""
-    out = np.full(len(cleaned_list), np.inf, dtype=np.float64)
-    ords = np.asarray(lang_ords, dtype=np.int64)
-    for o in np.unique(ords[ords >= 0]):
-        rows = np.flatnonzero(ords == o)
-        hs = [(i, _perplexity_windows(cleaned_list[i])) for i in rows]
-        hs = [(i, h) for i, h in hs if h is not None]
-        if not hs:
-            continue
-        blob = np.concatenate([h for _, h in hs], axis=0)
-        sizes = np.array([h.shape[0] for _, h in hs], dtype=np.int64)
-        logp = np.full(blob.shape[0], MISS_LOG_PROB, dtype=np.float64)
-        remaining = np.ones(blob.shape[0], dtype=bool)
-        for depth in (3, 2, 1):
-            if not remaining.any():
-                break
-            f = models.lookup(
-                depth,
-                np.ascontiguousarray(blob[:, depth - 1]),
-                np.array([int(o)], dtype=np.int64),
-            )[:, 0]
-            hit = remaining & (f > 0)
-            if hit.any():
-                logp[hit] = np.log(f[hit].astype(np.float64))
-            remaining &= ~hit
-        starts = np.zeros(len(sizes), dtype=np.int64)
-        starts[1:] = np.cumsum(sizes)[:-1]
-        seg = np.add.reduceat(logp, starts)
-        for (i, _h), s, m in zip(hs, seg, sizes):
-            out[i] = float(np.exp(-(s / m)))
     return out
 
 
@@ -244,23 +177,6 @@ class QualityConfig:
     require_langid_agreement: bool = False  # advisory flag by default
     minimum_relative_distance: float = 0.0
     low_accuracy: bool = False
-    # withIncreasedDetectionSpeed analog (LanguageDetectorBuilder.kt:141-144):
-    # swaps the frequency-lookup backend for a prebuilt dict index
-    # (models.DictBackedModels). Identical results on both backends; the
-    # benchmark in BENCH/BASELINE.md picked searchsorted as this
-    # environment's default.
-    increased_detection_speed: bool = False
-    # Batch-scoring shape for the ft cross-check + perplexity stages:
-    # False = per-row loops (measured FASTER in this sandbox — first-touch
-    # page-fault pathology makes large fresh gathers ~15x/3.6x slower,
-    # BENCH/BASELINE.md), True = conventional cross-row blob vectorization
-    # (the expected winner on a normally-behaving host). Results agree to
-    # float tolerance, NOT bit-identically — the blob path's reduceat
-    # accumulation order differs from the per-row pairwise sums, so
-    # near-tie argmax/perplexity ulps can diverge on long inputs (see
-    # ftlangid.predict_ords_vectorized). The flag exists so a real
-    # cluster can re-measure without a code change.
-    vectorized_batch_scoring: bool = False
     languages: tuple[str, ...] = field(
         default_factory=lambda: tuple(l.name for l in L.LANGUAGES)
     )
@@ -382,21 +298,11 @@ def assess_batch(
     conf_rows = batch_detector.confidence_rows(texts, cleaned_list=cleaned)
     mrd = batch_detector.minimum_relative_distance
     langs = [decide_confidences(c, mrd)[0] for c in conf_rows]
-    vectorized = bool(config and config.vectorized_batch_scoring)
-    ft_ords = (
-        ft.predict_ords_vectorized(cleaned)
-        if vectorized
-        else ft.predict_ords(cleaned)
-    )
+    ft_ords = ft.predict_ords(cleaned)
     lang_ords = [
         L.ORDINAL[lang] if lang != L.UNKNOWN else -1 for lang in langs
     ]
-    ppl_fn = (
-        trigram_perplexity_batch_vectorized
-        if vectorized
-        else trigram_perplexity_batch
-    )
-    ppls = ppl_fn(cleaned, lang_ords, batch_detector.models)
+    ppls = trigram_perplexity_batch(cleaned, lang_ords, batch_detector.models)
     return [
         _finish_assessment(
             t, confs, mrd, batch_detector.models, ft, config,

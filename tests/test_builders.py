@@ -86,8 +86,7 @@ def test_minimum_relative_distance_validation():
 
 
 def test_built_detectors_share_decisions(packed_models):
-    """build() / build_batch() / quality_config() agree, including the
-    increased-detection-speed backend."""
+    """build() / build_batch() / quality_config() agree."""
     b = (
         LanguageDetectorBuilder.from_languages("GERMAN", "ENGLISH", "FRENCH")
         .with_minimum_relative_distance(0.1)
@@ -97,14 +96,8 @@ def test_built_detectors_share_decisions(packed_models):
     bdet = b.build_batch()
     cfg = b.quality_config()
     assert cfg.languages == b.languages
-    assert cfg.increased_detection_speed
     texts = ["the people of the year", "der große fluss", ""]
     assert [det.detect(t) for t in texts] == bdet.detect_rows(texts)
-    # dict backend (increased speed) equals the default backend
-    plain = LanguageDetectorBuilder.from_languages(
-        "GERMAN", "ENGLISH", "FRENCH"
-    ).with_minimum_relative_distance(0.1).build_batch()
-    assert plain.detect_rows(texts) == bdet.detect_rows(texts)
 
 
 def test_console_repl_surface():

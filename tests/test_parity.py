@@ -159,37 +159,6 @@ def test_batch_parity_at_scale_sf01(packed_models):
     assert not mismatches, mismatches[:3]
 
 
-def test_dict_backend_lookup_parity(packed_models):
-    """withIncreasedDetectionSpeed backend (models.DictBackedModels) must
-    return bit-identical lookups AND detections vs the searchsorted
-    default (U4; UniBiTrigramLookup.kt:216-225 analog)."""
-    import numpy as np
-
-    from lingua_spark.engine.batch import BatchDetector
-    from lingua_spark.models import DictBackedModels
-
-    dm = DictBackedModels.from_packed(packed_models)
-    rng = np.random.default_rng(3)
-    for n in (1, 2, 3, 4, 5):
-        keys = packed_models.all_keys(n)
-        if keys.size == 0:
-            continue
-        hits = rng.choice(keys, size=min(200, keys.size), replace=False)
-        misses = rng.integers(0, 2**63, size=100).astype(np.uint64)
-        hashes = np.concatenate([hits, misses])
-        cols = np.array([0, 5, 17, 42], dtype=np.int64)
-        a = packed_models.lookup(n, hashes, cols)
-        b = dm.lookup(n, hashes, cols)
-        assert (a == b).all()
-        assert (packed_models.lookup(n, hashes) == dm.lookup(n, hashes)).all()
-    texts = ["the people of the year", "der große fluss", "это очень",
-             "日本語です", ""]
-    assert (
-        BatchDetector(models=dm).detect_rows(texts)
-        == BatchDetector(models=packed_models).detect_rows(texts)
-    )
-
-
 def test_batch_engine_subset_and_low_accuracy(packed_models):
     from lingua_spark.engine.batch import BatchDetector
 

@@ -90,49 +90,22 @@ def test_ft_langid_deterministic(ft_model):
     assert p1 == p2 == "ENGLISH"
 
 
-def test_vectorized_batch_scoring_parity(packed_models, ft_model):
-    """QualityConfig.vectorized_batch_scoring (VERDICT r02 item 8): the
-    cross-row blob variants of the ft cross-check and perplexity stages
-    must produce the same assessments as the per-row default on a real
-    transcript mix (content + noise + PII + empty rows)."""
-    import numpy as np
-
-    from lingua_spark.core.text import clean_up
+def test_assess_batch_matches_assess_text_exactly(packed_models, ft_model):
+    """The batch path (what the Spark UDF runs) equals the per-row
+    reference path on every field, perplexity included, bit for bit, on
+    a real transcript mix (content + noise + PII) plus empty and
+    one-char rows. Two inf perplexities count as equal."""
     from lingua_spark.corpus import transcripts
     from lingua_spark.engine.batch import BatchDetector
-    from lingua_spark.quality import (
-        QualityConfig,
-        assess_batch,
-        trigram_perplexity_batch,
-        trigram_perplexity_batch_vectorized,
-    )
+    from lingua_spark.quality import assess_batch
 
     texts = transcripts(n_turns=1500)["text"].tolist() + ["", "   ", "x"]
-    bdet = BatchDetector(models=packed_models)
-    rows = assess_batch(texts, bdet, ft_model, QualityConfig())
-    vrows = assess_batch(
-        texts, bdet, ft_model, QualityConfig(vectorized_batch_scoring=True)
-    )
-    # every decision field identical; perplexity agrees to summation-order
-    # precision (reduceat segment sum vs np.mean pairwise — last-ulp only)
-    for a, b in zip(rows, vrows):
-        for k in a:
-            if k == "perplexity":
-                assert np.isclose(a[k], b[k], rtol=1e-9, equal_nan=True) or (
-                    np.isinf(a[k]) and np.isinf(b[k])
-                )
-            else:
-                assert a[k] == b[k], (k, a[k], b[k])
-    # the perplexity values themselves agree to summation-order precision
-    cleaned = [clean_up(t) for t in texts]
-    ords = [r["lang"] for r in rows]
-    from lingua_spark import langdata as L
-
-    lang_ords = [
-        L.ORDINAL[o] if o != L.UNKNOWN else -1 for o in ords
-    ]
-    a = trigram_perplexity_batch(cleaned, lang_ords, packed_models)
-    b = trigram_perplexity_batch_vectorized(cleaned, lang_ords, packed_models)
-    finite = np.isfinite(a)
-    assert (finite == np.isfinite(b)).all()
-    assert np.allclose(a[finite], b[finite], rtol=1e-9)
+    cfg = QualityConfig()
+    rows = assess_batch(texts, BatchDetector(models=packed_models), ft_model, cfg)
+    det = Detector(models=packed_models)
+    assert len(rows) == len(texts)
+    for t, got in zip(texts, rows):
+        want = assess_text(t, det, ft_model, cfg)
+        assert got.keys() == want.keys()
+        for k in want:
+            assert got[k] == want[k], (t, k, got[k], want[k])
