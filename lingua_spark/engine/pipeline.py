@@ -174,7 +174,10 @@ def run_pipeline(
 ) -> dict:
     """Checkpoint-resumable batch run. Partitions are processed in waves;
     each wave is one Spark job writing ``data/partition_id=N/`` directories
-    plus one lineage JSON and one metrics row per partition. A killed run
+    plus one lineage JSON and one metrics row per partition. A metrics
+    row holds the partition's own counts and its wave's seconds
+    (``wave_s``) and rate (``wave_turns_per_sec``): the partitions of a
+    wave run in one job, so they have no time of their own. A killed run
     resumes by skipping partitions whose lineage is committed."""
     out = Path(output_dir)
     data_dir = out / "data"
@@ -225,6 +228,8 @@ def run_pipeline(
         )
         elapsed = time.time() - t0
         by_pid = {int(r["partition_id"]): r for r in stats}
+        wave_rows = sum(int(r["rows"]) for r in stats)
+        wave_tps = wave_rows / elapsed if elapsed > 0 else 0.0
         for pid in wave:
             r = by_pid.get(pid)
             rows = int(r["rows"]) if r else 0
@@ -242,7 +247,8 @@ def run_pipeline(
                 "kept": int(r["kept"]) if r else 0,
                 "dropped": int(r["dropped"]) if r else 0,
                 "scrubbed": int(r["scrubbed"]) if r else 0,
-                "turns_per_sec": rows / elapsed if elapsed > 0 else 0.0,
+                "wave_s": elapsed,
+                "wave_turns_per_sec": wave_tps,
             }
             (metrics_dir / f"partition-{pid:05d}.json").write_text(json.dumps(met))
             processed.append(pid)

@@ -4,11 +4,26 @@ The reference's per-language thread fan-out (`LanguageDetector.kt:545-572`)
 becomes data parallelism: Spark partitions × Arrow batches outside, NumPy
 language-matrix ops inside. No row-at-a-time Python UDFs — every batch is
 processed as pandas/NumPy (input_hint requirement).
+
+Every pandas-UDF, mapInPandas and applyInPandas body in the package
+calls ``worker_setup()`` first. PySpark's worker runs
+``importlib.invalidate_caches()`` at the start of every task, and before
+Python 3.13 each ``zipimporter`` re-reads its whole archive directory
+there: a worker holds a dozen importers over ``pyspark.zip`` plus two
+over the spark-core jar, so a reused worker spent 0.17-0.33 s per task
+re-reading archives that had not changed. ``worker_setup()`` makes that
+re-read conditional on the archive's stat, once per worker process; see
+BENCH/BASELINE.md, "Per-task Python worker setup".
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
+
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -65,6 +80,51 @@ DETECT_SCHEMA = StructType(
 )
 
 
+def _install_zipimport_stat_guard() -> bool:
+    """Wrap ``zipimport.zipimporter.invalidate_caches`` so an importer
+    re-reads its archive directory only when the archive's
+    ``(st_mtime_ns, st_size)`` differs from the one it saw at its last
+    re-read (the first call per importer always reads). A replaced or
+    removed archive is still picked up. Returns False if the wrapper is
+    already installed."""
+    stock = zipimport.zipimporter.invalidate_caches
+    if getattr(stock, "_lingua_stat_guard", False):
+        return False
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        if key is not None and getattr(self, "_lingua_stat", None) == key:
+            return
+        stock(self)
+        self._lingua_stat = key
+
+    invalidate_caches._lingua_stat_guard = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
+
+
+_WORKER_SET_UP = False
+
+
+def worker_setup() -> None:
+    """Once-per-worker setup for the package's executor-side kernels;
+    every Python UDF body calls it as its first statement. Installs the
+    zipimport stat guard (``_install_zipimport_stat_guard``). A no-op on
+    Python >= 3.13 (its zipimporter invalidation is already lazy),
+    outside a Python worker (the driver and in-process callers keep
+    stock import behaviour) and on every call after the first."""
+    global _WORKER_SET_UP
+    if (_WORKER_SET_UP or sys.version_info >= (3, 13)
+            or TaskContext.get() is None):
+        return
+    _install_zipimport_stat_guard()
+    _WORKER_SET_UP = True
+
+
 def _iso(name: str) -> str:
     return "unknown" if name == L.UNKNOWN else L.BY_NAME[name].iso1
 
@@ -74,7 +134,6 @@ def build_package_zip(dest: str | None = None) -> str:
     ``spark-submit --py-files`` (north rule). Returns the zip path.
     Used both by ``ship_package`` (programmatic runs) and by
     ``scripts/build_pyfiles.py`` (cluster submission)."""
-    import os
     import tempfile
     import zipfile
     from pathlib import Path
@@ -133,6 +192,7 @@ def make_assess_udf(spark: SparkSession, config: QualityConfig | None = None):
 
     @F.pandas_udf(ASSESS_SCHEMA)
     def assess(texts: pd.Series) -> pd.DataFrame:
+        worker_setup()
         from ..quality import assess_batch
         from .batch import BatchDetector
 
@@ -170,6 +230,7 @@ def make_multilang_udf(spark: SparkSession, config: QualityConfig | None = None)
 
     @F.pandas_udf(SECTION_SCHEMA)
     def detect_multi(texts: pd.Series) -> pd.Series:
+        worker_setup()
         from ..core.multilang import detect_multi_language
 
         models, cfg = bc.value
@@ -213,6 +274,7 @@ def make_detect_udf(spark: SparkSession, config: QualityConfig | None = None):
 
     @F.pandas_udf(DETECT_SCHEMA)
     def detect(texts: pd.Series) -> pd.DataFrame:
+        worker_setup()
         from .batch import BatchDetector
 
         models, cfg = bc.value

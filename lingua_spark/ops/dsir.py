@@ -193,14 +193,18 @@ def _make_dsir_occ_udf():
     bigrams with ' ' and hashes, so there is no tokenizer parity
     surface. bucket = first 3 md5 hex nibbles (int(h[:3], 16)), exactly
     ``_bucket("md5(g)")``; the md5-derived bucket per DISTINCT feature
-    string is memoized across the task."""
+    string is memoized for one Arrow batch (the memo is made in the UDF
+    body)."""
     import hashlib
     from collections import Counter
 
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..engine.udfs import worker_setup
+
     def dsir_occ(tok_arrays):
+        worker_setup()
         cache: dict[str, int] = {}
 
         def bucket(g: str) -> int:

@@ -108,7 +108,7 @@ def dedup_incremental_bloom(
     pass ``False`` to keep the lazy plan (caller owns the release)."""
     from pyspark import StorageLevel
 
-    from ..engine.udfs import ship_package
+    from ..engine.udfs import ship_package, worker_setup
 
     register_views(spark, sf_dir)
     ship_package(spark)
@@ -131,6 +131,7 @@ def dedup_incremental_bloom(
     def might_contain(
         p0: pd.Series, p1: pd.Series, p2: pd.Series, p3: pd.Series
     ) -> pd.Series:
+        worker_setup()
         bm = bc.value
         ok = np.ones(len(p0), dtype=bool)
         for p in (p0, p1, p2, p3):

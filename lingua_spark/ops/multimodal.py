@@ -301,11 +301,12 @@ def feature_row(
 def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: Arrow batches in, Arrow batches out;
     payloads stay columnar end to end."""
-    from ..engine.udfs import ship_package
+    from ..engine.udfs import ship_package, worker_setup
 
     ship_package(df.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_setup()
         for pdf in batches:
             feats, oks, shas = [], [], []
             for p, mime in zip(pdf["payload"], pdf["mime"]):
@@ -348,11 +349,12 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     to ``iter_y4m_frames``/NumPy downstream). Other video formats need
     codecs absent from this container and keep the deterministic
     byte-slice stub spaced across duration_ms."""
-    from ..engine.udfs import ship_package
+    from ..engine.udfs import ship_package, worker_setup
 
     ship_package(df.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_setup()
         for pdf in batches:
             out: dict[str, list] = {
                 "media_id": [], "frame_idx": [], "frame_ts_ms": [],

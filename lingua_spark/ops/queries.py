@@ -1879,9 +1879,12 @@ def _make_gopher_masses_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..engine.udfs import worker_setup
+
     schema = ", ".join(f"{f} bigint" for f in _GOPHER_MASS_FIELDS)
 
     def lingua_gopher_masses(texts):
+        worker_setup()
         th64 = _gopher_tok_hasher()
         none_row = (None,) * len(_GOPHER_MASS_FIELDS)
         rows = []
@@ -1918,18 +1921,27 @@ def _make_minhash_sig_udf():
     shingle vocabulary — boilerplate shingles hash once per Arrow batch,
     since the memo is made in the UDF body, not once per occurrence) plus skipping 10 per-occurrence string
     allocations. Python str slicing and min() are code-point /
-    bytewise-ASCII semantics, identical to Spark substring/min on hex."""
+    bytewise-ASCII semantics, identical to Spark substring/min on hex.
+    NULL ``c`` yields all-NULL lanes (no shingles, so no minimum); an
+    empty ``c`` yields the lanes of its one empty shingle. The SQL
+    callers still drop NULL/blank texts first (``_minhash_sig``)."""
     import hashlib
 
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..engine.udfs import worker_setup
+
     schema = ", ".join(f"h{i} string" for i in range(1, 9))
 
     def lingua_minhash_sig(texts, ks):
+        worker_setup()
         cache: dict[str, tuple] = {}
         out = []
         for c, k in zip(texts, ks):
+            if c is None:
+                out.append((None,) * 8)
+                continue
             k = int(k)
             seen = set()
             mins = None
@@ -1982,7 +1994,10 @@ def _make_winnow_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..engine.udfs import worker_setup
+
     def lingua_winnow(texts, ks, ws):
+        worker_setup()
         cache: dict[str, str] = {}
         out = []
         for c, k, w in zip(texts, ks, ws):
@@ -2022,7 +2037,10 @@ def _make_ndistinct_shingles_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..engine.udfs import worker_setup
+
     def lingua_ndistinct_shingles(texts, ks):
+        worker_setup()
         out = []
         for c, k in zip(texts, ks):
             if c is None:
@@ -2059,7 +2077,10 @@ def _make_simhash_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..engine.udfs import worker_setup
+
     def lingua_simhash(texts):
+        worker_setup()
         cache: dict[str, tuple] = {}
         out = []
         for text in texts:
@@ -2110,7 +2131,10 @@ def _make_gopher_quality_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from ..engine.udfs import worker_setup
+
     def lingua_gopher_quality(texts):
+        worker_setup()
         out = []
         for text in texts:
             toks = [
@@ -2207,7 +2231,7 @@ def gopher_repetition_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     The float rounding + keep gate run in Spark SQL expressions shared
     verbatim with the SQL form (``_gopher_rep_final_exprs``), so the
     outputs are identical by construction given equal integer masses."""
-    from ..engine.udfs import ship_package
+    from ..engine.udfs import ship_package, worker_setup
 
     ship_package(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -2215,6 +2239,7 @@ def gopher_repetition_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def run(batches):
+        worker_setup()
         for pdf in batches:
             yield _gopher_rep_masses(pdf)
 

@@ -125,7 +125,7 @@ def lsh_bucket_ann(
     ``n_vectors``: optional caller-supplied count. Without it we count()
     — metadata-only for a plain parquet scan, but a full job if ``emb``
     is filtered/transformed, so pipelines should pass the hint."""
-    from ..engine.udfs import ship_package
+    from ..engine.udfs import ship_package, worker_setup
 
     ship_package(spark)
     if n_planes is None:
@@ -139,6 +139,7 @@ def lsh_bucket_ann(
 
     @F.pandas_udf(ArrayType(LongType()))
     def buckets_of(embs: pd.Series) -> pd.Series:
+        worker_setup()
         mat = np.stack(embs.to_numpy()).astype(np.float64)
         return pd.Series(list(bucket_codes(mat, bc.value)))
 
@@ -250,7 +251,7 @@ def _neardup_bucket_ids(
     One scan of the embedding table + one shuffle by (table, bucket) —
     the MinHash-band shape; embeddings are NOT carried through the
     explode (re-joined later only for surviving candidate ids)."""
-    from ..engine.udfs import ship_package
+    from ..engine.udfs import ship_package, worker_setup
 
     ship_package(spark)
     if n_planes is None:
@@ -264,6 +265,7 @@ def _neardup_bucket_ids(
 
     @F.pandas_udf(ArrayType(LongType()))
     def buckets_of(embs: pd.Series) -> pd.Series:
+        worker_setup()
         mat = np.stack(embs.to_numpy()).astype(np.float64)
         return pd.Series(list(bucket_codes(mat, bc.value)))
 
@@ -498,9 +500,11 @@ def _cell_udf(bc):
     broadcast codebook — the ONE assignment closure shared by ivf_ann
     and semdedup (same rationale as nearest_cell: a one-sided edit must
     not let IVF and SemDeDup assign cells differently)."""
+    from ..engine.udfs import worker_setup
 
     @F.pandas_udf(LongType())
     def cell_of(embs: pd.Series) -> pd.Series:
+        worker_setup()
         mat = np.stack(embs.to_numpy()).astype(np.float64)
         return pd.Series(nearest_cell(mat, bc.value))
 
@@ -892,9 +896,12 @@ def semdedup(
     balanced — ``semdedup_cell_sizes`` audits it (no-silent-caps rule).
     Fixture oracle: ``expected_semdedup`` recomputes every step in
     NumPy, bit-identically."""
+    from ..engine.udfs import worker_setup
+
     with_cell, bc = _semdedup_with_cell(spark, emb, n_cells, seed, n_vectors)
 
     def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        worker_setup()
         c = bc.value
         mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         vec_ids = pdf["vec_id"].to_numpy()

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine.udfs import make_assess_udf
+from .engine.udfs import make_assess_udf, worker_setup
 from .quality import QualityConfig
 
 TRANSCRIPT_DDL = (
@@ -89,6 +89,7 @@ def stateful_conversation_tracker(
     state_schema = "turns long, kept long, streak long"
 
     def track(key, pdfs, state: GroupState):
+        worker_setup()
         import pandas as pd
 
         turns = kept = streak = 0

@@ -691,6 +691,34 @@ def test_minhash_pairs_single_signature_subtree(spark):
     assert plan.count("Scan parquet") == 1, plan
 
 
+def test_minhash_sig_kernel_null_contract(spark):
+    """``lingua_minhash_sig`` declares its NULL behaviour instead of
+    relying on the SQL filter upstream: a NULL text gives all-NULL
+    lanes, a text shorter than k the lanes of its one whole-text
+    shingle, a longer one the per-lane minimum over its k-shingles.
+    (``spark`` only parses the UDF's DDL return type.)"""
+    import hashlib
+
+    import pandas as pd
+
+    from lingua_spark.ops.queries import _make_minhash_sig_udf
+
+    def lanes(s):
+        b = s.encode("utf-8")
+        ds = (hashlib.md5(b).hexdigest(), hashlib.md5(b"~" + b).hexdigest())
+        return [d[i : i + 8] for d in ds for i in (0, 8, 16, 24)]
+
+    kernel = _make_minhash_sig_udf().func
+    out = kernel(pd.Series([None, "ab", "abcdefg"]), pd.Series([5, 5, 5]))
+    assert list(out.columns) == [f"h{i}" for i in range(1, 9)]
+    assert out.iloc[0].isna().all()
+    assert list(out.iloc[1]) == lanes("ab")
+    shingles = ["abcde", "bcdef", "cdefg"]
+    assert list(out.iloc[2]) == [
+        min(col) for col in zip(*(lanes(s) for s in shingles))
+    ]
+
+
 def test_exact_flags_shuffles_on_hash_key(spark):
     """Plan gate (VERDICT r03 item 5): dedup_exact_flags must key its
     window Exchange on the 8-byte xxhash64 of the text, never on the raw

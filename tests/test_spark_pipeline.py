@@ -2,6 +2,8 @@
 BASELINE.json — measured here as exact agreement), stable ordering,
 checkpoint-resume, salted conversation stats."""
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -105,6 +107,34 @@ def test_pipeline_checkpoint_resume(spark, tmp_path):
     (out / "lineage" / "partition-00002.json").unlink()
     res3 = run_pipeline(spark, df, out, n_partitions=4, waves=2)
     assert res3["processed_partitions"] == [2]
+
+
+def test_pipeline_wave_metrics(spark, tmp_path):
+    """Each metrics row carries its wave's seconds and rate: the wave's
+    total rows over the wave's seconds, the same for every partition of
+    the wave (a per-partition rate over the wave's time would understate
+    the rate by about the wave size)."""
+    pdf = transcripts(n_turns=120)
+    out = tmp_path / "run"
+    run_pipeline(spark, spark.createDataFrame(pdf), out, n_partitions=4,
+                 waves=2)
+    waves: dict[float, list[dict]] = {}
+    for p in sorted((out / "metrics").glob("partition-*.json")):
+        met = json.loads(p.read_text())
+        lin = json.loads((out / "lineage" / p.name).read_text())
+        assert "turns_per_sec" not in met
+        assert 0 < met["wave_s"] <= lin["finished_at"] - lin["started_at"]
+        waves.setdefault(lin["started_at"], []).append(met)
+    assert len(waves) == 2
+    total = 0
+    for rows in waves.values():
+        assert len(rows) == 2
+        assert len({(m["wave_s"], m["wave_turns_per_sec"]) for m in rows}) == 1
+        wave_rows = sum(m["rows"] for m in rows)
+        assert rows[0]["wave_turns_per_sec"] * rows[0]["wave_s"] == (
+            pytest.approx(wave_rows))
+        total += wave_rows
+    assert total == len(pdf.drop_duplicates(["conv_id", "turn_idx"]))
 
 
 def test_skewed_conversation_partitioning(spark):
