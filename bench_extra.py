@@ -6,6 +6,7 @@ plans captured, without re-running the whole suite.
 
 Usage:
     python bench_extra.py q <name> [reps]        # registry query, warm+timed
+    python bench_extra.py jobs <name> [reps]     # job ledger of one pass
     python bench_extra.py explain <name>         # formatted physical plan
     python bench_extra.py sql <file.sql> [reps]  # ad-hoc Spark SQL text
     python bench_extra.py list                   # registry names
@@ -13,6 +14,12 @@ Usage:
 Timing policy matches bench.py: one warm-up pass, then ``reps`` timed
 noop-sink passes (min + all samples reported). Data dir / cores from
 $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
+
+``jobs`` is the job ledger: after one warm-up pass, each of ``reps``
+(default 1) noop-sink passes runs in its own job group, and every Spark
+job the pass launched is listed from the UI's REST API (id, call site =
+the job's name, duration, tasks), with the jobs counted per call site
+(the name's part before " at ").
 """
 
 from __future__ import annotations
@@ -21,6 +28,9 @@ import json
 import os
 import sys
 import time
+import urllib.request
+from collections import Counter
+from datetime import datetime
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
@@ -56,6 +66,29 @@ def _time(mk, reps: int) -> dict:
     return {"min": min(samples), "samples": samples}
 
 
+def _job_ledger(spark, group: str) -> dict:
+    sc = spark.sparkContext
+    # job ends reach the status store through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
+    jobs = []
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        with urllib.request.urlopen(f"{base}/{jid}", timeout=10) as r:
+            j = json.load(r)
+        dur = None
+        if j.get("submissionTime") and j.get("completionTime"):
+            t0, t1 = (datetime.strptime(j[k], "%Y-%m-%dT%H:%M:%S.%f%Z")
+                      for k in ("submissionTime", "completionTime"))
+            dur = round((t1 - t0).total_seconds(), 3)
+        jobs.append({"id": jid, "call_site": j["name"], "duration_s": dur,
+                     "tasks": j["numTasks"]})
+    # "parquet at NativeMethodAccessorImpl.java:0" and "parquet at
+    # <unknown>:0" are the same call site
+    by_site = Counter(j["call_site"].split(" at ")[0] for j in jobs)
+    return {"jobs": jobs, "n_jobs": len(jobs),
+            "by_call_site": dict(by_site.most_common())}
+
+
 def main() -> None:
     mode = sys.argv[1]
     spark = _session()
@@ -80,6 +113,20 @@ def main() -> None:
     fn = queries()[name]
     if mode == "explain":
         fn(spark, SF_DIR).explain("formatted")
+        return
+    if mode == "jobs":
+        reps = int(sys.argv[3]) if len(sys.argv) > 3 else 1
+        _noop(fn(spark, SF_DIR))  # warm-up
+        passes = []
+        for i in range(reps):
+            group = f"bench_extra-jobs-{name}-{i}"
+            spark.sparkContext.setJobGroup(group, group)
+            t0 = time.time()
+            _noop(fn(spark, SF_DIR))
+            wall = round(time.time() - t0, 3)
+            spark.sparkContext.setJobGroup(None, None)
+            passes.append({"wall_s": wall, **_job_ledger(spark, group)})
+        print(json.dumps({"query": name, "sf_dir": SF_DIR, "passes": passes}))
         return
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     spark.sparkContext.setJobDescription(f"bench_extra {name}")

@@ -14,6 +14,9 @@ pandas UDFs.
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1867,9 +1870,11 @@ _GOPHER_MASS_FIELDS = ["chars", "t2", "t3", "t4"] + [
 
 def _make_gopher_masses_udf():
     """Arrow-batched scalar pandas UDF ``lingua_gopher_masses(text)`` ->
-    struct of the 10 integer gram masses (all-NULL fields for a
-    zero-token doc, so the SQL form can filter them out — mapInPandas
-    drops the row instead; same kernel either way). Registered by
+    struct of the 10 integer gram masses, counted in code points
+    (all-NULL fields for a zero-token doc — NULL, empty or space-only
+    text — so the SQL form can filter them out; mapInPandas drops the row
+    instead; same kernel either way; one token has only its char mass,
+    every gram mass 0). Registered by
     ``register_views`` so the plain-SQL registry form runs the
     vectorized kernel instead of the interpreted all-HOF plan (guide
     §4.2: the metric is doc-local — the honest shape is one scan-side
@@ -1984,8 +1989,9 @@ def _make_winnow_udf():
     exactly the array-form SQL definition in ``_fingerprint_winnow``
     (md5 every k-shingle, min over each w-window incl. shrinking tail
     windows, dedup), including its degenerate edges: NULL text yields
-    the single element NULL (md5(NULL) is NULL) and a short text yields
-    the md5 of its whole remainder. Same win as the minhash kernel: the
+    the single element NULL (md5(NULL) is NULL) and a text shorter than
+    k, the empty text included, yields the md5 of its whole remainder;
+    shingles are code-point slices. Same win as the minhash kernel: the
     md5 digest per DISTINCT shingle is memoized for one Arrow batch (the
     memo is made in the UDF body), and no
     per-position string churn reaches the JVM expression interpreter."""
@@ -2031,7 +2037,8 @@ def _make_ndistinct_shingles_udf():
     """``lingua_ndistinct_shingles(c, k)`` -> BIGINT: number of DISTINCT
     k-char shingles of the already-cleaned text under the engine's
     shingle definition (``_shingles``: a text shorter than k yields its
-    single whole-text shingle). Python set over code-point slices —
+    single whole-text shingle, so it counts 1, the empty text too; a NULL
+    text gives NULL). Python set over code-point slices —
     identical semantics to size(array_distinct(transform(...))) without
     the interpreted array build."""
     import pandas as pd
@@ -2062,10 +2069,11 @@ def _make_ndistinct_shingles_udf():
 
 def _make_simhash_udf():
     """``lingua_simhash(text)`` -> BIGINT 16-bit SimHash, or NULL for a
-    doc with no tokens (the SQL form's words explode emits no row for
-    those — callers filter NULLs). Same definition as the SQL: bit j is
-    set iff the sum over word OCCURRENCES of +/-1 (parity of the j-th
-    hex nibble of md5(word)) is positive. The per-word +/-1 vector is
+    doc with no tokens: NULL, empty or space-only text (the split is on
+    U+0020 only, so a tab is a token; the SQL form's words explode emits
+    no row for those — callers filter NULLs). Same definition as the
+    SQL: bit j is set iff the sum over word OCCURRENCES of +/-1 (parity
+    of the j-th hex nibble of md5(word)) is positive. The per-word +/-1 vector is
     md5-derived and memoized for one Arrow batch (the memo is made in
     the UDF body; Zipf vocabulary); token
     split is the ``_tokens`` semantics (lower, trim spaces, split on
@@ -2120,12 +2128,13 @@ def _make_gopher_quality_udf():
     """``lingua_gopher_quality(text)`` -> struct of the five INTEGER
     inputs of the Gopher shape gate (token count, char mass, top token
     count, bigram count, top bigram count; all-NULL for a zero-token
-    doc). Every float in the output (mean length, fractions, keep
-    gate) is computed afterwards in Spark SQL with the exact original
-    expressions over these integers, so JVM/Python float or rounding
-    semantics never diverge — the same split the repetition family
-    uses. nb/tbc are NULL when the doc has no bigram, reproducing the
-    old LEFT JOIN's absent-row coalesce path."""
+    doc: NULL, empty or space-only text). Every float in the output
+    (mean length, fractions, keep gate) is computed afterwards in Spark
+    SQL with the exact original expressions over these integers, so
+    JVM/Python float or rounding semantics never diverge — the same
+    split the repetition family uses. nb/tbc are NULL when the doc has
+    no bigram (one token), reproducing the old LEFT JOIN's absent-row
+    coalesce path. Char mass counts code points."""
     from collections import Counter
 
     import pandas as pd
@@ -2234,7 +2243,7 @@ def gopher_repetition_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..engine.udfs import ship_package, worker_setup
 
     ship_package(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_sf_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
 
@@ -3356,6 +3365,74 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 
+# The session settings that change what Spark infers from a parquet footer.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SF_SCHEMA_PATHS_MAX = 256
+_sf_schemas_lock = threading.Lock()
+
+
+def _sf_stamp(spark: SparkSession, path: str):
+    """What decides the schema Spark infers for ``path``: the file's
+    ``(st_ino, st_mtime_ns, st_size)`` and the session's parquet inference
+    settings. None for a relative path (the JVM resolves it against its
+    own working directory, which ``os.chdir`` does not move), a directory
+    or a path that cannot be stat-ed."""
+    if not os.path.isabs(path):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (
+        st.st_ino, st.st_mtime_ns, st.st_size,
+        tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS),
+    )
+
+
+def read_sf_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``spark.read.parquet(f"{sf_dir}/{table}.parquet")`` without the
+    schema-inference job on every read after the first.
+
+    The first read of a file infers its schema as Spark always does and
+    remembers ``df.schema``; a later read of the same unchanged file passes
+    that schema to ``spark.read.schema(...)``, which launches no job. The
+    cache key is the file's absolute path plus its ``st_ino``,
+    ``st_mtime_ns`` and ``st_size`` plus the session's
+    ``_PARQUET_INFERENCE_CONFS``, so a rewritten file or a changed setting
+    is inferred afresh. The stamp is taken before and after the inference
+    read and the schema is kept only when both agree. Only regular files
+    at absolute paths are cached: a directory-form table, a relative path
+    or a path whose stat fails is read exactly as ``spark.read.parquet``
+    reads it. The cache belongs to the session
+    (``spark._lingua_sf_schemas``: path -> (stamp, schema)), one entry per
+    path, at most ``_SF_SCHEMA_PATHS_MAX`` paths."""
+    path = f"{sf_dir}/{table}.parquet"
+    stamp = _sf_stamp(spark, path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    with _sf_schemas_lock:
+        cache = spark.__dict__.setdefault("_lingua_sf_schemas", {})
+        hit = cache.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if _sf_stamp(spark, path) == stamp:
+        with _sf_schemas_lock:
+            cache.pop(path, None)
+            if len(cache) >= _SF_SCHEMA_PATHS_MAX:
+                del cache[next(iter(cache))]
+            cache[path] = (stamp, schema)
+    return df
+
+
 # ---------------------------------------------------------------------------
 # fixture-backed oracles for the four non-SQL-expressible queries: the
 # expected outputs are computed WITHOUT Spark (pure-Python dict oracle /
@@ -3395,8 +3472,15 @@ def fixture_oracle_sql(name: str) -> str:
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """(Re-)create a temp view for each of the ten ``TABLES`` of
+    ``sf_dir`` and register the SQL UDFs. Every call replaces every view,
+    so a second ``sf_dir``, a rewritten file or a view registered by hand
+    in between is always overwritten. The reads go through
+    ``read_sf_table``: a table file whose path, inode, mtime, size and the
+    session's parquet inference settings are unchanged since an earlier
+    read is opened with its known schema, so no schema-inference job runs."""
     for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        read_sf_table(spark, sf_dir, t).createOrReplaceTempView(t)
     register_sql_udfs(spark)
 
 
@@ -3716,7 +3800,7 @@ FROM q JOIN cc ON q.doc_id = cc.doc_id
 
 def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map the documents table onto the transcript input_hint shape."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_sf_table(spark, sf_dir, "documents")
     return docs.select(
         F.concat(F.lit("conv-"), (F.col("doc_id") % 50).cast("string")).alias(
             "conv_id"
@@ -4392,7 +4476,7 @@ def detect_language_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full lingua-core detection over documents -> per-language counts."""
     from ..engine.udfs import make_detect_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_sf_table(spark, sf_dir, "documents")
     detect = make_detect_udf(spark)
     return (
         docs.withColumn("d", detect(F.col("text")))
@@ -4411,7 +4495,7 @@ def detect_language_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver's gate scale."""
     from ..engine.udfs import make_detect_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_sf_table(spark, sf_dir, "documents")
     detect = make_detect_udf(spark)
     return docs.select(
         "doc_id", detect(F.col("text")).getField("lang").alias("detected_lang")
@@ -4424,7 +4508,7 @@ def multilang_sections_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are pinned by tests/test_multilang.py)."""
     from ..engine.udfs import make_multilang_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_sf_table(spark, sf_dir, "documents")
     udf = make_multilang_udf(spark)
     return (
         docs.withColumn("sections", udf(F.col("text")))
@@ -4530,7 +4614,7 @@ def detect_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query is the aggregation operator, graded on shape + values."""
     from ..engine.udfs import make_detect_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_sf_table(spark, sf_dir, "documents")
     detect = make_detect_udf(spark)
     return (
         docs.withColumn("d", detect(F.col("text")))

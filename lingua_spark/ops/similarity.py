@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .queries import read_sf_table
+
 
 # Python twin of Spark's xxhash64 over a LongType column (XXH64 of the
 # 8-byte little-endian value, seed 42) — verified bit-identical against
@@ -207,7 +209,7 @@ def lsh_bucket_ann(
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return lsh_bucket_ann(spark, emb)
 
 
@@ -346,7 +348,7 @@ def embedding_neardup_pairs(
 
 
 def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return embedding_neardup_pairs(spark, emb)
 
 
@@ -372,7 +374,7 @@ def embedding_neardup_hot_buckets(
 def dedup_embedding_neardup_hot_buckets(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return embedding_neardup_hot_buckets(spark, emb)
 
 
@@ -629,7 +631,7 @@ def ivf_ann(
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return ivf_ann(spark, emb)
 
 
@@ -741,7 +743,7 @@ def dedup_embedding_cc(
 
     from .graph import connected_components
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     pairs = embedding_neardup_pairs(spark, emb)
     labels = connected_components(
         pairs, src="vec_a", dst="vec_b", checkpoint_dir=checkpoint_dir
@@ -848,7 +850,7 @@ def semdedup_cell_sizes(
 
 
 def dedup_semantic_cell_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return semdedup_cell_sizes(spark, emb)
 
 
@@ -953,7 +955,7 @@ def _semdedup_cell_rows(nrm, vec_ids, centroid, tau):
 
 
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_sf_table(spark, sf_dir, "embeddings")
     return semdedup(spark, emb)
 
 

@@ -719,6 +719,127 @@ def test_minhash_sig_kernel_null_contract(spark):
     ]
 
 
+# one astral-plane (U+1F600, one code point, four UTF-8 bytes) and one
+# combining-mark (e + U+0301) string for the kernel contract tests below
+_ASTRAL = "x\U0001F600 x\U0001F600 x\U0001F600"
+_COMBINING = "e\u0301 e\u0301"
+
+
+def _md5(s):
+    import hashlib
+
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def test_winnow_kernel_null_short_contract(spark):
+    """``lingua_winnow``: NULL text gives ``[NULL]`` (md5(NULL) is NULL),
+    a text shorter than k (the empty text too) the md5 of its whole
+    remainder, a longer one the distinct window minima of its per-position
+    code-point k-shingle md5s."""
+    import pandas as pd
+
+    from lingua_spark.ops.queries import _make_winnow_udf
+
+    def winnow(c, k, w):
+        hs = [_md5(c[i : i + k]) for i in range(len(c) - k + 1)]
+        return list(dict.fromkeys(min(hs[j : j + w]) for j in range(len(hs))))
+
+    texts = [None, "", "ab", "\U0001F600\u0301", _ASTRAL, _COMBINING]
+    ks = [5, 5, 5, 5, 3, 2]
+    ws = [3, 3, 3, 3, 2, 2]
+    out = _make_winnow_udf().func(pd.Series(texts), pd.Series(ks), pd.Series(ws))
+    assert out.tolist() == [
+        [None], [_md5("")], [_md5("ab")], [_md5("\U0001F600\u0301")],
+        winnow(_ASTRAL, 3, 2), winnow(_COMBINING, 2, 2),
+    ]
+
+
+def test_ndistinct_shingles_kernel_null_short_contract(spark):
+    """``lingua_ndistinct_shingles``: NULL for NULL, 1 for a text shorter
+    than k (its one whole-text shingle; the empty text too), else the
+    number of distinct code-point k-shingles."""
+    import pandas as pd
+
+    from lingua_spark.ops.queries import _make_ndistinct_shingles_udf
+
+    texts = [None, "", "ab", "\U0001F600" * 3, _COMBINING + " e\u0301"]
+    out = _make_ndistinct_shingles_udf().func(
+        pd.Series(texts), pd.Series([5, 5, 5, 2, 2])
+    )
+    # "e\u0301 e\u0301 e\u0301": "e\u0301", "\u0301 ", " e"
+    assert out.tolist() == [None, 1, 1, 1, 3]
+
+
+def test_simhash_kernel_null_empty_contract(spark):
+    """``lingua_simhash``: NULL for NULL, empty and space-only text (no
+    token under the ``_tokens`` split, which splits on U+0020 only, so a
+    tab is a token); else bit j is set iff the occurrence-weighted sum of
+    +/-1 from the parity of md5(token)'s j-th hex nibble is positive."""
+    from collections import Counter
+
+    import pandas as pd
+
+    from lingua_spark.ops.queries import _make_simhash_udf
+
+    def simhash(text):
+        cnt = Counter(t for t in text.lower().strip(" ").split(" ") if t)
+        sums = [
+            sum(n * (1 if int(_md5(t)[j], 16) % 2 else -1) for t, n in cnt.items())
+            for j in range(16)
+        ]
+        return sum(1 << j for j in range(16) if sums[j] > 0)
+
+    texts = [None, "", "   ", "\t", _ASTRAL, _COMBINING]
+    out = _make_simhash_udf().func(pd.Series(texts))
+    assert out.tolist() == [None, None, None] + [
+        simhash(t) for t in texts[3:]
+    ]
+
+
+def test_gopher_quality_kernel_null_contract(spark):
+    """``lingua_gopher_quality``: an all-NULL struct for NULL, empty or
+    space-only text (zero tokens); ``nb``/``tbc`` NULL for one token (no
+    bigram); char mass counts code points."""
+    import pandas as pd
+
+    from lingua_spark.ops.queries import _make_gopher_quality_udf
+
+    out = _make_gopher_quality_udf().func(
+        pd.Series([None, "", "  ", "One", _ASTRAL, _COMBINING])
+    )
+    assert list(out.columns) == ["nt", "sl", "tc", "nb", "tbc"]
+    assert out.iloc[:3].isna().all().all()
+    rows = [
+        [None if pd.isna(v) else int(v) for v in r]
+        for r in out.iloc[3:].itertuples(index=False)
+    ]
+    assert rows == [[1, 3, 1, None, None], [3, 6, 3, 2, 2], [2, 4, 2, 1, 1]]
+
+
+def test_gopher_masses_kernel_null_contract(spark):
+    """``lingua_gopher_masses``: all-NULL fields for NULL, empty or
+    space-only text (zero tokens; the SQL form filters them out); one
+    token has only its char mass; masses count code points."""
+    import pandas as pd
+
+    from lingua_spark.ops.queries import _GOPHER_MASS_FIELDS, _make_gopher_masses_udf
+
+    out = _make_gopher_masses_udf().func(
+        pd.Series([None, "", " ", "one", _ASTRAL, _COMBINING])
+    )
+    assert list(out.columns) == _GOPHER_MASS_FIELDS
+    assert out.iloc[:3].isna().all().all()
+    rows = [list(map(int, r)) for r in out.iloc[3:].itertuples(index=False)]
+    zeros = [0] * 6
+    assert rows == [
+        [3, 0, 0, 0] + zeros,
+        # the bigram "x\U0001F600 x\U0001F600" (mass 4) occurs twice,
+        # the one trigram has mass 6
+        [6, 8, 6, 0] + zeros,
+        [4, 4, 0, 0] + zeros,
+    ]
+
+
 def test_exact_flags_shuffles_on_hash_key(spark):
     """Plan gate (VERDICT r03 item 5): dedup_exact_flags must key its
     window Exchange on the 8-byte xxhash64 of the text, never on the raw
