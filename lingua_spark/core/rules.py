@@ -241,10 +241,11 @@ def filter_languages_mask(
     sids_all = script_ids(codes)
     logo_all = is_logogram_char(codes)
 
-    # Vectorized per-word alphabet voting (replaces the word loop; exact:
-    # word values are dyadic 1.0/0.5, so summation order cannot change the
-    # totals). A word votes its script iff all its chars share one
-    # non-OTHER script; single-char logogram words count half.
+    # Vectorized per-word alphabet voting. A word votes its script iff all
+    # its chars share one non-OTHER script; single-char logogram words
+    # weigh LOGOGRAM_WORD_VALUE (0.7, not dyadic), so both the votes and
+    # the adjusted word count are summed in word order, as the reference
+    # loop adds them.
     n_words = spans.shape[0]
     alphabet_votes = np.zeros(N_SCRIPTS, dtype=np.float64)
     adjusted_word_count = 0.0
@@ -267,7 +268,7 @@ def filter_languages_mask(
             const & logoword, L.LOGOGRAM_WORD_VALUE, L.FULL_WORD_VALUE
         )
         np.add.at(alphabet_votes, sid0[const], word_value[const])
-        adjusted_word_count = float(word_value.sum())
+        adjusted_word_count = float(np.cumsum(word_value)[-1])
 
     if not alphabet_votes.any():
         return det_mask.copy()

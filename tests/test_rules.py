@@ -310,7 +310,7 @@ def test_filter_chars_to_languages_vectorized_matches_reference_loop():
         word_value = np.full(spans.shape[0], L.FULL_WORD_VALUE)
         votes = np.zeros(R.N_SCRIPTS, dtype=np.float64)
         np.add.at(votes, sid0[const], word_value[const])
-        adjusted = float(word_value.sum())
+        adjusted = float(np.cumsum(word_value)[-1])
         if not votes.any():
             # mixed-script words cast no alphabet vote -> early det_mask copy
             assert (got == det_mask).all(), f"trial {trial}: {text!r}"
@@ -321,3 +321,19 @@ def test_filter_chars_to_languages_vectorized_matches_reference_loop():
         subset = filtered_mask & (counts >= adjusted / 2.0)
         want = subset if subset.any() else filtered_mask
         assert (got == want).all(), f"trial {trial}: {text!r}"
+
+
+def test_filter_adjusted_word_count_sums_in_word_order():
+    """65 words of HAN (0.7) and Latin (1.0): a pairwise sum reads 56.0,
+    the word-order sum 56.000000000000014, so the 28 words with 'ä' fall
+    short of half and the mask keeps every Latin candidate."""
+    pattern = "HHHLLLHLLHHHHHLHLLLLLHLHLHHLHHHHHLLHLHHLHLLLHLLHHLLLLLLHHLLHLLLHL"
+    words, n_latin = [], 0
+    for c in pattern:
+        if c == "H":
+            words.append("中")
+        else:
+            words.append("bär" if n_latin < 28 else "bar")
+            n_latin += 1
+    got = _filter(" ".join(words))
+    assert got == {l.name for l in L.LANGUAGES if "LATIN" in l.scripts}
