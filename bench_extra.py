@@ -10,6 +10,7 @@ Usage:
     python bench_extra.py explain <name>         # formatted physical plan
     python bench_extra.py sql <file.sql> [reps]  # ad-hoc Spark SQL text
     python bench_extra.py list                   # registry names
+    python bench_extra.py rules [turns] [reps]   # rule-stage size ladder
 
 Timing policy matches bench.py: one warm-up pass, then ``reps`` timed
 noop-sink passes (min + all samples reported). Data dir / cores from
@@ -20,6 +21,15 @@ $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS like bench.py.
 job the pass launched is listed from the UI's REST API (id, call site =
 the job's name, duration, tasks), with the jobs counted per call site
 (the name's part before " at ").
+
+``rules`` is the size ladder of the F1/F2 rule stage, in process, no Spark:
+perfbench-shaped turns (``corpus.transcripts`` over perfbench's 16
+languages) at 1x, 4x and 16x of ``turns`` (default 3000); over each size's
+lettered rows it times the per-row form (``word_spans`` +
+``detect_language_with_rules`` + ``filter_languages_mask`` when no rule
+decides, one row at a time) and ``rules_batch`` by ``CHUNK_ROWS`` chunk,
+min of ``reps`` (default 3), checks the two agree, and prints JSON with
+the least-squares fit ``t = a + b * rows`` of each form.
 """
 
 from __future__ import annotations
@@ -89,8 +99,91 @@ def _job_ledger(spark, group: str) -> dict:
             "by_call_site": dict(by_site.most_common())}
 
 
+def _rules_ladder(turns: int, reps: int) -> dict:
+    import numpy as np
+
+    from lingua_spark import corpus
+    from lingua_spark import langdata as L
+    from lingua_spark.core.rules import (
+        UNKNOWN_ORD,
+        detect_language_with_rules,
+        filter_languages_mask,
+        rules_batch,
+    )
+    from lingua_spark.core.text import clean_up, word_spans
+    from lingua_spark.engine.batch import CHUNK_ROWS
+    from lingua_spark.uniscript import CAT_LETTER, cat_ids, codes_of
+    from perfbench.inputs import TRANSCRIPT_LANGUAGES
+
+    langs = tuple(l.name for l in L.LANGUAGES)
+
+    def per_row(rows):
+        out = []
+        for t in rows:
+            codes = codes_of(t)
+            spans = word_spans(codes)
+            lang = detect_language_with_rules(codes, spans, langs)
+            mask = (
+                filter_languages_mask(codes, spans, langs)
+                if lang == L.UNKNOWN
+                else None
+            )
+            out.append((lang, mask))
+        return out
+
+    def batch(rows):
+        return [
+            rules_batch(rows[c0 : c0 + CHUNK_ROWS], langs)
+            for c0 in range(0, len(rows), CHUNK_ROWS)
+        ]
+
+    def best(fn, rows):
+        times = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            out = fn(rows)
+            times.append(time.perf_counter() - t0)
+        return min(times), out
+
+    sizes = []
+    for mult in (1, 4, 16):
+        texts = list(corpus.transcripts(
+            turns * mult, languages=TRANSCRIPT_LANGUAGES, seed=11
+        )["text"])
+        rows = [
+            t for t in texts
+            if (c := clean_up(t)) and (cat_ids(codes_of(c)) == CAT_LETTER).any()
+        ]
+        t_row, ref = best(per_row, rows)
+        t_batch, got = best(batch, rows)
+        ords = np.concatenate([o for o, _ in got])
+        masks = np.concatenate([m for _, m in got])
+        for i, (lang, mask) in enumerate(ref):
+            o = ords[i]
+            assert lang == (L.UNKNOWN if o == UNKNOWN_ORD else L.LANGUAGES[o].name)
+            assert mask is None or (mask == masks[i]).all()
+        sizes.append({"turns": turns * mult, "rows": len(rows),
+                      "per_row_s": round(t_row, 4),
+                      "batch_s": round(t_batch, 4)})
+
+    def fit(key):
+        b, a = np.polyfit([s["rows"] for s in sizes],
+                          [s[key] for s in sizes], 1)
+        return {"a_s": round(float(a), 4),
+                "b_s_per_krow": round(float(b) * 1000, 4)}
+
+    return {"mode": "rules", "reps": reps, "chunk_rows": CHUNK_ROWS,
+            "sizes": sizes, "per_row_fit": fit("per_row_s"),
+            "batch_fit": fit("batch_s")}
+
+
 def main() -> None:
     mode = sys.argv[1]
+    if mode == "rules":
+        turns = int(sys.argv[2]) if len(sys.argv) > 2 else 3000
+        reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+        print(json.dumps(_rules_ladder(turns, reps)))
+        return
     spark = _session()
     if mode == "list":
         from __spark_entry__ import queries

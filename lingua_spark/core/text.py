@@ -95,6 +95,23 @@ def word_spans(codes: np.ndarray) -> np.ndarray:
     return spans[np.argsort(spans[:, 0], kind="stable")]
 
 
+def row_word_spans(
+    texts: list[str],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``word_spans`` of rows joined into one blob by U+0020.
+
+    Returns (blob code points, (W, 2) spans in blob positions, (W,) row of
+    each word). U+0020 always ends a word, so no span crosses a row, and
+    row i's spans are ``word_spans`` of row i shifted by its blob offset.
+    """
+    codes = codes_of(" ".join(texts))
+    spans = word_spans(codes)
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts)) + 1
+    row_start = np.cumsum(lens) - lens
+    word_row = np.searchsorted(row_start, spans[:, 0], side="right") - 1
+    return codes, spans, word_row
+
+
 def word_list(text: str) -> list[str]:
     """Split at U+0020 and logograms; logograms become 1-char words."""
     spans = word_spans(codes_of(text))

@@ -18,9 +18,12 @@ Replaces the per-row scoring loop with cross-row NumPy:
   engine, oracle.py) must therefore sum via np.add.reduceat — never via
   np.sum or add.reduce, whose pairwise summation orders differ.
 
-Rules (F1/F2) remain per-row loops over vectorized char tables — they are
-~25% of the cost and inherently word-sequential; candidate masks are dense
-(N_LANGUAGES,) booleans so scoring never branches per language.
+Rules F1/F2 run cross-row too: ``core.rules.rules_batch`` takes one
+CHUNK_ROWS chunk of lettered rows at a time, joins them into one
+code-point blob and returns every row's rule result and dense
+(N_LANGUAGES,) candidate mask, so scoring never branches per language. Its
+float sums follow the word-order contract in ``core.rules``, which the
+per-row engine and oracle.py reach through the same kernel.
 """
 
 from __future__ import annotations
@@ -29,22 +32,19 @@ import numpy as np
 
 from .. import langdata as L
 from ..core.detector import _IS_LOGO_LANG, ngram_length_range
-from ..core.rules import detect_language_with_rules, filter_languages_mask
-from ..core.text import clean_up, word_spans
+from ..core.rules import UNKNOWN_ORD, rules_batch
+from ..core.text import clean_up
 from ..models import PackedModels
 from ..uniscript import CAT_LETTER, cat_ids, codes_of
 
 _ALL = tuple(l.name for l in L.LANGUAGES)
 _NL = L.N_LANGUAGES
 
-# rows per scoring chunk: bounds the (windows x languages) gathers so the
-# per-chunk temporaries stay cache-resident (512 rows ≈ 25k distinct
-# windows x ~50 candidate columns; measured faster than 2048-row chunks).
-# Env-overridable because the right size depends on co-location: executor
-# workers inherit the env, so a cluster can tune it without a code change.
-import os as _os
-
-CHUNK_ROWS = int(_os.environ.get("LINGUA_SPARK_CHUNK_ROWS", "512"))
+# rows per rules and scoring chunk: bounds the (windows x languages)
+# gathers so the per-chunk temporaries stay cache-resident (512 rows ≈ 25k
+# distinct windows x ~50 candidate columns; measured faster than 2048-row
+# chunks).
+CHUNK_ROWS = 512
 
 
 def _batch_windows(
@@ -250,33 +250,33 @@ class BatchDetector:
         ``[clean_up(t) for t in texts]``)."""
         R = len(texts)
         results: list[list[tuple[str, float]]] = [[] for _ in range(R)]
+        if cleaned_list is None:
+            cleaned_list = [clean_up(t) for t in texts]
+        lettered = [
+            i
+            for i, cleaned in enumerate(cleaned_list)
+            if cleaned != "" and (cat_ids(codes_of(cleaned)) == CAT_LETTER).any()
+        ]
         to_score_idx: list[int] = []
         to_score_cleaned: list[str] = []
         cand_masks: list[np.ndarray] = []
-        for i, text in enumerate(texts):
-            cleaned = (
-                cleaned_list[i] if cleaned_list is not None else clean_up(text)
+        for c0 in range(0, len(lettered), CHUNK_ROWS):
+            idx = lettered[c0 : c0 + CHUNK_ROWS]
+            rule_ords, masks = rules_batch(
+                [texts[i] for i in idx], self.languages
             )
-            if cleaned == "" or not (
-                cat_ids(codes_of(cleaned)) == CAT_LETTER
-            ).any():
-                continue
-            orig = codes_of(text)
-            spans = word_spans(orig)
-            rule_lang = detect_language_with_rules(orig, spans, self.languages)
-            if rule_lang != L.UNKNOWN:
-                results[i] = [(rule_lang, 1.0)]
-                continue
-            mask = filter_languages_mask(orig, spans, self.languages)
-            n_cand = int(mask.sum())
-            if n_cand == 1:
-                results[i] = [(L.LANGUAGES[int(np.argmax(mask))].name, 1.0)]
-                continue
-            if self.low_accuracy and len(cleaned) < 3:
-                continue
-            to_score_idx.append(i)
-            to_score_cleaned.append(cleaned)
-            cand_masks.append(mask)
+            n_cand = masks.sum(axis=1)
+            for j, i in enumerate(idx):
+                if rule_ords[j] != UNKNOWN_ORD:
+                    results[i] = [(L.LANGUAGES[rule_ords[j]].name, 1.0)]
+                elif n_cand[j] == 1:
+                    results[i] = [
+                        (L.LANGUAGES[int(np.argmax(masks[j]))].name, 1.0)
+                    ]
+                elif not (self.low_accuracy and len(cleaned_list[i]) < 3):
+                    to_score_idx.append(i)
+                    to_score_cleaned.append(cleaned_list[i])
+                    cand_masks.append(masks[j])
 
         for c0 in range(0, len(to_score_idx), CHUNK_ROWS):
             idx = to_score_idx[c0 : c0 + CHUNK_ROWS]

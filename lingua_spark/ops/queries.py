@@ -3602,12 +3602,13 @@ def conv_select_with_neardup(
     and feeds every consumer (this selection, the export writer) the
     same table instead of re-clustering per composition. Default None
     recomputes — the self-contained shape the driver/bench measure."""
-    register_views(spark, sf_dir)
+    if neardup is None:
+        neardup = conv_minhash_cc(spark, sf_dir)  # registers the views
+    else:
+        register_views(spark, sf_dir)
     sel = spark.sql(SQL_QUERIES["conv_select_final"][0]).select(
         "conv_id", F.col("selected").alias("keep_gates")
     )
-    if neardup is None:
-        neardup = conv_minhash_cc(spark, sf_dir)
     cc = neardup.select(
         "conv_id", F.col("keep").alias("keep_neardup")
     )
@@ -3647,10 +3648,11 @@ def transcript_export_full(
     ``neardup``: precomputed ``conv_minhash_cc`` output to reuse (see
     ``conv_select_with_neardup`` — cluster once, feed every consumer);
     None recomputes self-contained."""
-    register_views(spark, sf_dir)
-    exported = spark.sql(SQL_QUERIES["transcript_export_final"][0])
     if neardup is None:
-        neardup = conv_minhash_cc(spark, sf_dir)
+        neardup = conv_minhash_cc(spark, sf_dir)  # registers the views
+    else:
+        register_views(spark, sf_dir)
+    exported = spark.sql(SQL_QUERIES["transcript_export_final"][0])
     reps = neardup.filter("keep").select("conv_id")
     return exported.join(reps, "conv_id")
 
@@ -3763,12 +3765,13 @@ def corpus_select_final(
     ``dedup``: a precomputed ``dedup_minhash_cc`` output (doc_id, keep,
     ...) to reuse — cluster once, feed every consumer (see
     ``conv_select_with_neardup``); None recomputes self-contained."""
-    register_views(spark, sf_dir)
+    if dedup is None:
+        dedup = dedup_minhash_cc(spark, sf_dir)  # registers the views
+    else:
+        register_views(spark, sf_dir)
     quality = spark.sql(SQL_QUERIES["quality_keep_sql"][0]).withColumnRenamed(
         "keep", "keep_quality"
     )
-    if dedup is None:
-        dedup = dedup_minhash_cc(spark, sf_dir)
     dedup = dedup.select(
         "doc_id", F.col("keep").alias("keep_dedup")
     )

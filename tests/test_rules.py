@@ -2,6 +2,7 @@
 (`src/test/kotlin/.../api/LanguageDetectorTest.kt:102-563`)."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from lingua_spark import langdata as L
 from lingua_spark.core.rules import (
@@ -337,3 +338,193 @@ def test_filter_adjusted_word_count_sums_in_word_order():
             n_latin += 1
     got = _filter(" ".join(words))
     assert got == {l.name for l in L.LANGUAGES if "LATIN" in l.scripts}
+
+
+@pytest.mark.parametrize(
+    "pattern,expected",
+    [
+        # word-order sum 37.5: UNKNOWN (15 words) is not cut and stays
+        # within 0.8 of CHINESE; a pairwise sum reads 37.50000000000001
+        ("BHHHBHBHBGBHHHHBBHHBHBHBHHBHBBHGHHHHGHBBHGHGH", "UNKNOWN"),
+        # word-order sum 45.000000000000036 cuts UNKNOWN (18 words); a
+        # pairwise sum reads 45.0 and would keep it
+        (
+            "BBHHBHHHHBHHHGGBHGHHHBGHHBHBHBHGHBHHHHBHHHHGHHBBBHBBBB",
+            "CHINESE",
+        ),
+    ],
+)
+def test_detect_adjusted_word_count_sums_in_word_order(pattern, expected):
+    """F1 seeds its adjusted word count with the non-voting words ('bar')
+    and adds the voting ones (HAN 0.7, 'groß' 1.0) in word order; the
+    UNKNOWN cut sits exactly at 0.4 of it in real arithmetic."""
+    words = {"H": "中", "G": "groß", "B": "bar"}
+    assert _detect(" ".join(words[c] for c in pattern)) == expected
+
+
+# --- cross-row kernel vs the frozen per-row references -------------------
+
+_UNIQUE_CHARS = sorted(
+    {c for l in L.LANGUAGES_WITH_UNIQUE_CHARS for c in l.unique_chars}
+)
+_C2L_CHARS = sorted(L.CHARS_TO_LANGUAGES)
+_ALPHABETS = (
+    st.sampled_from("abcdefghijklmnopqrstuvwxyz"),
+    st.sampled_from(_UNIQUE_CHARS),
+    st.sampled_from(_C2L_CHARS),
+    st.characters(min_codepoint=0x4E00, max_codepoint=0x4FFF),  # Han
+    st.characters(min_codepoint=0x3040, max_codepoint=0x30FF),  # kana
+    st.characters(min_codepoint=0xAC00, max_codepoint=0xAD00),  # Hangul
+    st.characters(min_codepoint=0x400, max_codepoint=0x4FF),  # Cyrillic
+    st.characters(min_codepoint=0x900, max_codepoint=0x97F),  # Devanagari
+    st.characters(min_codepoint=0x370, max_codepoint=0x3FF),  # Greek
+    st.characters(min_codepoint=0x600, max_codepoint=0x6FF),  # Arabic
+    st.characters(min_codepoint=0x300, max_codepoint=0x36F),  # combining
+    st.characters(min_codepoint=0x1F300, max_codepoint=0x1F5FF),  # emoji
+    st.characters(min_codepoint=0x20000, max_codepoint=0x2A6DF),  # Han ext B
+    st.characters(min_codepoint=0x30000, max_codepoint=0x10FFFF),
+    st.sampled_from("\t\n\xa0\u3000.,0"),  # in-word: only U+0020 splits
+)
+# words of mixed alphabets, or of one alphabet so that rows often carry
+# decisive F1 votes and close alphabet counts
+_WORD = st.one_of(
+    st.text(st.one_of(*_ALPHABETS), min_size=1, max_size=8),
+    *(st.text(a, min_size=1, max_size=8) for a in _ALPHABETS),
+)
+_ROW = st.one_of(
+    st.sampled_from(["", " ", "   ", "\t", " \n\t "]),
+    st.builds(
+        lambda lead, words, sep, trail: lead + sep.join(words) + trail,
+        st.sampled_from(["", " "]),
+        st.lists(_WORD, max_size=14),
+        st.sampled_from([" ", "  "]),
+        st.sampled_from(["", " ", "\n"]),
+    ),
+)
+_SUBSET = ("ENGLISH", "GERMAN", "CHINESE", "JAPANESE")
+
+
+def _reference_rows(rows, languages):
+    import rules_reference as ref
+
+    out = []
+    for row in rows:
+        codes = codes_of(row)
+        spans = word_spans(codes)
+        out.append(
+            (
+                ref.detect_language_with_rules(codes, spans, languages),
+                ref.filter_languages_mask(codes, spans, languages),
+            )
+        )
+    return out
+
+
+def _names(rule_ords):
+    from lingua_spark.core.rules import UNKNOWN_ORD
+
+    return [
+        L.UNKNOWN if o == UNKNOWN_ORD else L.LANGUAGES[o].name
+        for o in rule_ords
+    ]
+
+
+def _assert_batch_equals(rows, languages, want):
+    import numpy as np
+
+    from lingua_spark.core.rules import rules_batch
+
+    rule_ords, masks = rules_batch(rows, languages)
+    assert masks.shape == (len(rows), L.N_LANGUAGES)
+    got_names = _names(rule_ords)
+    for i, (lang, mask) in enumerate(want):
+        assert got_names[i] == lang, (i, rows[i])
+        assert np.array_equal(masks[i], mask), (i, rows[i])
+
+
+@pytest.mark.parametrize(
+    "languages", [tuple(l.name for l in L.LANGUAGES), _SUBSET]
+)
+@settings(max_examples=120, deadline=None)
+@given(rows=st.lists(_ROW, min_size=1, max_size=8), data=st.data())
+def test_rules_batch_matches_frozen_reference(languages, rows, data):
+    """Row by row, rules_batch equals the frozen per-word loop, whatever
+    the row's neighbours: shuffled, split at random points, one row per
+    batch; the one-row wrappers agree too."""
+    from lingua_spark.core.rules import (
+        detect_language_with_rules as f1,
+        filter_languages_mask as f2,
+    )
+
+    want = _reference_rows(rows, languages)
+    _assert_batch_equals(rows, languages, want)
+
+    perm = data.draw(st.permutations(range(len(rows))))
+    _assert_batch_equals(
+        [rows[p] for p in perm], languages, [want[p] for p in perm]
+    )
+    cuts = sorted(
+        data.draw(st.lists(st.integers(0, len(rows)), max_size=3))
+    )
+    for a, b in zip([0, *cuts], [*cuts, len(rows)]):
+        _assert_batch_equals(rows[a:b], languages, want[a:b])
+    for i, row in enumerate(rows):
+        _assert_batch_equals([row], languages, [want[i]])
+        codes = codes_of(row)
+        spans = word_spans(codes)
+        assert f1(codes, spans, languages) == want[i][0]
+        assert (f2(codes, spans, languages) == want[i][1]).all()
+
+
+_EDGE_ROWS = [
+    "groźß",  # ß votes GERMAN, ź only languages outside _SUBSET
+    "straße żółw",
+    "",
+    "   ",
+    "a\tb\nc ß",
+    "中 ß",
+    "日本語です 中文",
+    "한국어 abc",
+    "ńż\tß",
+    "\U00030000ß \U00030001",
+    "e\u0301te caf\u00e9",
+    "ѓ ѕ џ ђ",
+]
+
+
+@pytest.mark.parametrize(
+    "languages", [tuple(l.name for l in L.LANGUAGES), _SUBSET]
+)
+def test_rules_batch_matches_frozen_reference_on_edge_rows(languages):
+    want = _reference_rows(_EDGE_ROWS, languages)
+    _assert_batch_equals(_EDGE_ROWS, languages, want)
+    for row, w in zip(_EDGE_ROWS, want):
+        _assert_batch_equals([row], languages, [w])
+
+
+def test_rules_batch_drops_votes_for_excluded_languages():
+    """A unique-char vote for a language outside the detector's set is
+    dropped before the word's winner is chosen: 'groźß' is GERMAN for
+    _SUBSET (ź votes only excluded languages) but a tie, hence UNKNOWN,
+    with every language."""
+    from lingua_spark.core.rules import rules_batch
+
+    assert _names(rules_batch(["groźß"], _SUBSET)[0]) == ["GERMAN"]
+    assert _names(rules_batch(["groźß"])[0]) == ["UNKNOWN"]
+
+
+@pytest.mark.parametrize(
+    "languages", [tuple(l.name for l in L.LANGUAGES), _SUBSET]
+)
+def test_rules_batch_matches_frozen_reference_on_transcripts(languages):
+    """The same comparison over generated multilingual chat turns, in
+    CHUNK_ROWS-sized batches as BatchDetector runs them."""
+    from lingua_spark import corpus
+    from lingua_spark.engine.batch import CHUNK_ROWS
+
+    rows = list(corpus.transcripts(600, seed=5)["text"])
+    want = _reference_rows(rows, languages)
+    for c0 in range(0, len(rows), CHUNK_ROWS):
+        _assert_batch_equals(
+            rows[c0 : c0 + CHUNK_ROWS], languages, want[c0 : c0 + CHUNK_ROWS]
+        )

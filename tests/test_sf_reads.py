@@ -147,3 +147,44 @@ def test_relative_path_is_not_cached(spark):
     from lingua_spark.ops import queries
 
     assert queries._sf_stamp(spark, "testdata/documents.parquet") is None
+
+
+@pytest.mark.parametrize("precomputed", [False, True])
+@pytest.mark.parametrize(
+    "entry",
+    ["corpus_select_final", "conv_select_with_neardup",
+     "transcript_export_full"],
+)
+def test_composition_registers_views_once(spark, monkeypatch, entry,
+                                          precomputed):
+    """Each composition registers the views once per call: through its
+    nested clustering entry when it runs one, else itself. The views then
+    belong to the call's sf dir, whatever was registered before."""
+    from lingua_spark.ops import queries as Q
+
+    small, big = SF_DIRS
+    kw = {}
+    if precomputed:
+        if entry == "corpus_select_final":
+            kw["dedup"] = Q.dedup_minhash_cc(spark, small)
+        else:
+            kw["neardup"] = Q.conv_minhash_cc(spark, small)
+    Q.register_views(spark, big)
+    calls = []
+    real = Q.register_views
+
+    def counting(spark_, sf_dir):
+        calls.append(sf_dir)
+        real(spark_, sf_dir)
+
+    monkeypatch.setattr(Q, "register_views", counting)
+    getattr(Q, entry)(spark, small, **kw)
+    assert calls == [small]
+    for t in Q.TABLES:
+        assert spark.table(t).count() == pq.read_metadata(
+            f"{small}/{t}.parquet"
+        ).num_rows, t
+    got = spark.sql("SELECT sum(n_chars) AS s FROM documents").collect()[0].s
+    assert got == pc.sum(
+        pq.read_table(f"{small}/documents.parquet")["n_chars"]
+    ).as_py()
