@@ -394,7 +394,6 @@ def rules_batch(
 
 
 def _one_row(codes: np.ndarray, spans: np.ndarray) -> _Blob:
-    spans = np.asarray(spans, dtype=np.int64).reshape(-1, 2)
     return _Blob(codes, spans, np.zeros(spans.shape[0], dtype=np.int64), 1)
 
 

@@ -254,11 +254,10 @@ class BatchDetector:
             cleaned_list = [clean_up(t) for t in texts]
         lettered = [
             i
-            for i, cleaned in enumerate(cleaned_list)
-            if cleaned != "" and (cat_ids(codes_of(cleaned)) == CAT_LETTER).any()
+            for i, c in enumerate(cleaned_list)
+            if c != "" and (cat_ids(codes_of(c)) == CAT_LETTER).any()
         ]
         to_score_idx: list[int] = []
-        to_score_cleaned: list[str] = []
         cand_masks: list[np.ndarray] = []
         for c0 in range(0, len(lettered), CHUNK_ROWS):
             idx = lettered[c0 : c0 + CHUNK_ROWS]
@@ -275,12 +274,11 @@ class BatchDetector:
                     ]
                 elif not (self.low_accuracy and len(cleaned_list[i]) < 3):
                     to_score_idx.append(i)
-                    to_score_cleaned.append(cleaned_list[i])
                     cand_masks.append(masks[j])
 
         for c0 in range(0, len(to_score_idx), CHUNK_ROWS):
             idx = to_score_idx[c0 : c0 + CHUNK_ROWS]
-            cleaned_chunk = to_score_cleaned[c0 : c0 + CHUNK_ROWS]
+            cleaned_chunk = [cleaned_list[i] for i in idx]
             masks = np.stack(cand_masks[c0 : c0 + CHUNK_ROWS])
             totals = score_rows_batch(
                 cleaned_chunk, masks, self.models, self.low_accuracy
