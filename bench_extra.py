@@ -11,6 +11,7 @@ Usage:
     python bench_extra.py sql <file.sql> [reps]  # ad-hoc Spark SQL text
     python bench_extra.py list                   # registry names
     python bench_extra.py rules [turns] [reps]   # rule-stage size ladder
+    python bench_extra.py assess [turns] [reps]  # assess-stage size ladder
 
 Timing policy matches bench.py: one warm-up pass, then ``reps`` timed
 noop-sink passes (min + all samples reported). Data dir / cores from
@@ -30,6 +31,17 @@ lettered rows it times the per-row form (``word_spans`` +
 decides, one row at a time) and ``rules_batch`` by ``CHUNK_ROWS`` chunk,
 min of ``reps`` (default 3), checks the two agree, and prints JSON with
 the least-squares fit ``t = a + b * rows`` of each form.
+
+``assess`` is the same kind of ladder for the four cross-row assess
+stages: clean-up (``clean_up_batch`` vs one-row ``clean_up``), text stats
+(``text_stats_batch`` vs ``text_stats``), the ft cross-check
+(``FastTextish.predict_ords`` vs ``predict_ord_cleaned``) and perplexity
+(``trigram_perplexity_batch`` vs ``trigram_perplexity``, under each row's
+detected language). Each size's turns run in ``ASSESS_BATCH_ROWS``-row
+batches, one task's share of ``chat_assess`` (3,000 turns, 8
+partitions); every stage is timed in its batch form and through its
+one-row wrapper, min of ``reps``, the two forms are checked equal, and
+the JSON holds the fit ``t = a + b * rows`` of each form and stage.
 """
 
 from __future__ import annotations
@@ -99,10 +111,36 @@ def _job_ledger(spark, group: str) -> dict:
             "by_call_site": dict(by_site.most_common())}
 
 
+def _min_time(fn, reps: int):
+    """(min wall seconds of ``reps`` calls, last result)."""
+    times = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        out = fn()
+        times.append(time.perf_counter() - t0)
+    return min(times), out
+
+
+def _fit(sizes: list[dict], key: str) -> dict:
+    """Least-squares ``t = a + b * rows`` over the ladder's sizes."""
+    import numpy as np
+
+    b, a = np.polyfit([s["rows"] for s in sizes], [s[key] for s in sizes], 1)
+    return {"a_s": round(float(a), 4), "b_s_per_krow": round(float(b) * 1000, 4)}
+
+
+def _ladder_turns(turns: int) -> list[str]:
+    from lingua_spark import corpus
+    from perfbench.inputs import TRANSCRIPT_LANGUAGES
+
+    return list(corpus.transcripts(
+        turns, languages=TRANSCRIPT_LANGUAGES, seed=11
+    )["text"])
+
+
 def _rules_ladder(turns: int, reps: int) -> dict:
     import numpy as np
 
-    from lingua_spark import corpus
     from lingua_spark import langdata as L
     from lingua_spark.core.rules import (
         UNKNOWN_ORD,
@@ -110,10 +148,9 @@ def _rules_ladder(turns: int, reps: int) -> dict:
         filter_languages_mask,
         rules_batch,
     )
-    from lingua_spark.core.text import clean_up, word_spans
+    from lingua_spark.core.text import clean_up_batch, word_spans
     from lingua_spark.engine.batch import CHUNK_ROWS
-    from lingua_spark.uniscript import CAT_LETTER, cat_ids, codes_of
-    from perfbench.inputs import TRANSCRIPT_LANGUAGES
+    from lingua_spark.uniscript import codes_of
 
     langs = tuple(l.name for l in L.LANGUAGES)
 
@@ -137,25 +174,12 @@ def _rules_ladder(turns: int, reps: int) -> dict:
             for c0 in range(0, len(rows), CHUNK_ROWS)
         ]
 
-    def best(fn, rows):
-        times = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            out = fn(rows)
-            times.append(time.perf_counter() - t0)
-        return min(times), out
-
     sizes = []
     for mult in (1, 4, 16):
-        texts = list(corpus.transcripts(
-            turns * mult, languages=TRANSCRIPT_LANGUAGES, seed=11
-        )["text"])
-        rows = [
-            t for t in texts
-            if (c := clean_up(t)) and (cat_ids(codes_of(c)) == CAT_LETTER).any()
-        ]
-        t_row, ref = best(per_row, rows)
-        t_batch, got = best(batch, rows)
+        texts = _ladder_turns(turns * mult)
+        rows = [t for t, ok in zip(texts, clean_up_batch(texts)[1]) if ok]
+        t_row, ref = _min_time(lambda: per_row(rows), reps)
+        t_batch, got = _min_time(lambda: batch(rows), reps)
         ords = np.concatenate([o for o, _ in got])
         masks = np.concatenate([m for _, m in got])
         for i, (lang, mask) in enumerate(ref):
@@ -166,15 +190,78 @@ def _rules_ladder(turns: int, reps: int) -> dict:
                       "per_row_s": round(t_row, 4),
                       "batch_s": round(t_batch, 4)})
 
-    def fit(key):
-        b, a = np.polyfit([s["rows"] for s in sizes],
-                          [s[key] for s in sizes], 1)
-        return {"a_s": round(float(a), 4),
-                "b_s_per_krow": round(float(b) * 1000, 4)}
-
     return {"mode": "rules", "reps": reps, "chunk_rows": CHUNK_ROWS,
-            "sizes": sizes, "per_row_fit": fit("per_row_s"),
-            "batch_fit": fit("batch_s")}
+            "sizes": sizes, "per_row_fit": _fit(sizes, "per_row_s"),
+            "batch_fit": _fit(sizes, "batch_s")}
+
+
+# rows per Arrow batch in the assess ladder: chat_assess's 3,000 turns
+# over its 8 partitions
+ASSESS_BATCH_ROWS = 375
+
+
+def _assess_ladder(turns: int, reps: int) -> dict:
+    from lingua_spark import langdata as L
+    from lingua_spark.core.text import clean_up, clean_up_batch
+    from lingua_spark.engine.batch import BatchDetector
+    from lingua_spark.quality import (
+        text_stats,
+        text_stats_batch,
+        trigram_perplexity,
+        trigram_perplexity_batch,
+    )
+    from lingua_spark.resources import fasttextish, packed_models
+
+    models, ft = packed_models(), fasttextish()
+    bdet = BatchDetector(models=models)
+    sizes = []
+    for mult in (1, 4, 16):
+        rows = _ladder_turns(turns * mult)
+        texts = [rows[c0 : c0 + ASSESS_BATCH_ROWS]
+                 for c0 in range(0, len(rows), ASSESS_BATCH_ROWS)]
+        cleaned = [clean_up_batch(t)[0] for t in texts]
+        ords = [[L.ORDINAL.get(n, -1) for n in bdet.detect_rows(t)]
+                for t in texts]
+        # stage -> (batch form, one-row form) of batch i
+        forms = {
+            "clean_up": (
+                lambda i: clean_up_batch(texts[i])[0],
+                lambda i: [clean_up(t) for t in texts[i]],
+            ),
+            "text_stats": (
+                lambda i: text_stats_batch(texts[i]),
+                lambda i: [text_stats(t) for t in texts[i]],
+            ),
+            "ft_predict": (
+                lambda i: ft.predict_ords(cleaned[i]).tolist(),
+                lambda i: [ft.predict_ord_cleaned(c) for c in cleaned[i]],
+            ),
+            "perplexity": (
+                lambda i: trigram_perplexity_batch(
+                    cleaned[i], ords[i], models
+                ).tolist(),
+                lambda i: [
+                    trigram_perplexity(c, o, models) if o >= 0 else float("inf")
+                    for c, o in zip(cleaned[i], ords[i])
+                ],
+            ),
+        }
+        size = {"turns": len(rows), "rows": len(rows)}
+        for name, (batch, one_row) in forms.items():
+            t_batch, got = _min_time(
+                lambda: [x for i in range(len(texts)) for x in batch(i)], reps
+            )
+            t_row, want = _min_time(
+                lambda: [x for i in range(len(texts)) for x in one_row(i)], reps
+            )
+            assert got == want, name
+            size[f"{name}.batch_s"] = round(t_batch, 4)
+            size[f"{name}.one_row_s"] = round(t_row, 4)
+        sizes.append(size)
+
+    fits = {k[:-2]: _fit(sizes, k) for k in sizes[0] if k.endswith("_s")}
+    return {"mode": "assess", "reps": reps,
+            "batch_rows": ASSESS_BATCH_ROWS, "sizes": sizes, "fits": fits}
 
 
 def main() -> None:
@@ -183,6 +270,11 @@ def main() -> None:
         turns = int(sys.argv[2]) if len(sys.argv) > 2 else 3000
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
         print(json.dumps(_rules_ladder(turns, reps)))
+        return
+    if mode == "assess":
+        turns = int(sys.argv[2]) if len(sys.argv) > 2 else 3000
+        reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+        print(json.dumps(_assess_ladder(turns, reps)))
         return
     spark = _session()
     if mode == "list":

@@ -17,7 +17,7 @@ from ..models import PackedModels
 from ..uniscript import CAT_LETTER, cat_ids, codes_of
 from .ngram import extract_ngram_prefix_hashes
 from .rules import detect_language_with_rules, filter_languages_by_rules
-from .text import clean_up, word_spans
+from .text import clean_up_batch, word_spans
 
 _ALL = tuple(l.name for l in L.LANGUAGES)
 _IS_LOGO_LANG = np.zeros(L.N_LANGUAGES, dtype=bool)
@@ -32,6 +32,24 @@ def ngram_length_range(cleaned_len: int, low_accuracy: bool) -> list[int]:
     else:
         lengths = [1, 2, 3, 4, 5]
     return [n for n in lengths if cleaned_len >= n]
+
+
+def decide_confidences(
+    confs: list[tuple[str, float]], min_rel_distance: float
+) -> tuple[str, float]:
+    """Top-2 decision (LanguageDetector.kt:121-135): the one helper behind
+    ``Detector.detect``, ``BatchDetector.decide_rows``, multi-language
+    sections and quality assessment. UNKNOWN when there is no confidence,
+    when the top two tie, or when their gap is below
+    ``min_rel_distance``."""
+    if not confs:
+        return L.UNKNOWN, 0.0
+    if len(confs) == 1:
+        return confs[0]
+    first, second = confs[0][1], confs[1][1]
+    if first == second or (first - second) < min_rel_distance:
+        return L.UNKNOWN, 0.0
+    return confs[0]
 
 
 def score_candidates(
@@ -168,9 +186,8 @@ class Detector:
         self.languages = tuple(L.LANGUAGES[o].name for o in ords)
 
     def confidence_values(self, text: str) -> list[tuple[str, float]]:
-        cleaned = clean_up(text)
-        codes = codes_of(cleaned)
-        if cleaned == "" or not (cat_ids(codes) == CAT_LETTER).any():
+        (cleaned,), (lettered,) = clean_up_batch([text])
+        if not lettered:
             return []
         orig_codes = codes_of(text)
         spans = word_spans(orig_codes)
@@ -190,14 +207,6 @@ class Detector:
 
     def detect(self, text: str) -> str:
         """detectLanguageOf + top-2 decision (LanguageDetector.kt:121-135)."""
-        confs = self.confidence_values(text)
-        if not confs:
-            return L.UNKNOWN
-        if len(confs) == 1:
-            return confs[0][0]
-        first, second = confs[0][1], confs[1][1]
-        if first == second:
-            return L.UNKNOWN
-        if (first - second) < self.minimum_relative_distance:
-            return L.UNKNOWN
-        return confs[0][0]
+        return decide_confidences(
+            self.confidence_values(text), self.minimum_relative_distance
+        )[0]

@@ -28,6 +28,7 @@ import numpy as np
 
 from .. import langdata as L
 from ..uniscript import SCRIPT_ID, cat_ids, codes_of, is_letter, script_ids
+from .detector import decide_confidences
 from .rules import detect_language_with_rules, filter_languages_by_rules
 from .text import is_logogram_char, word_spans
 
@@ -295,18 +296,7 @@ def detect_multi_language(text: str, detector) -> list[dict]:
     results = []
     for s in merged:
         confs = s.confidences(detector)
-        if not confs:
-            lang = L.UNKNOWN
-        elif len(confs) == 1:
-            lang = confs[0][0]
-        else:
-            first, second = confs[0][1], confs[1][1]
-            if first == second or (
-                (first - second) < detector.minimum_relative_distance
-            ):
-                lang = L.UNKNOWN
-            else:
-                lang = confs[0][0]
+        lang = decide_confidences(confs, detector.minimum_relative_distance)[0]
         results.append(
             {
                 "start": s.start,

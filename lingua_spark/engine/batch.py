@@ -31,20 +31,18 @@ from __future__ import annotations
 import numpy as np
 
 from .. import langdata as L
-from ..core.detector import _IS_LOGO_LANG, ngram_length_range
+from ..core.detector import (
+    _IS_LOGO_LANG,
+    decide_confidences,
+    ngram_length_range,
+)
 from ..core.rules import UNKNOWN_ORD, rules_batch
-from ..core.text import clean_up
+from ..core.text import CHUNK_ROWS, clean_up_batch
 from ..models import PackedModels
 from ..uniscript import CAT_LETTER, cat_ids, codes_of
 
 _ALL = tuple(l.name for l in L.LANGUAGES)
 _NL = L.N_LANGUAGES
-
-# rows per rules and scoring chunk: bounds the (windows x languages)
-# gathers so the per-chunk temporaries stay cache-resident (512 rows ≈ 25k
-# distinct windows x ~50 candidate columns; measured faster than 2048-row
-# chunks).
-CHUNK_ROWS = 512
 
 
 def _batch_windows(
@@ -243,20 +241,21 @@ class BatchDetector:
         self.low_accuracy = low_accuracy
 
     def confidence_rows(
-        self, texts: list[str], cleaned_list: list[str] | None = None
+        self,
+        texts: list[str],
+        cleaned: tuple[list[str], np.ndarray] | None = None,
     ) -> list[list[tuple[str, float]]]:
-        """``cleaned_list`` lets assess_batch share one clean_up pass per
-        row across detection / langid / perplexity (must equal
-        ``[clean_up(t) for t in texts]``)."""
+        """Confidence values of every row. ``cleaned`` is
+        ``clean_up_batch(texts)`` (cleaned rows and their "has a letter"
+        flags), passed by assess_batch so one clean-up pass serves
+        detection, the ft cross-check and perplexity; without it the rows
+        are cleaned here by the same kernel."""
         R = len(texts)
         results: list[list[tuple[str, float]]] = [[] for _ in range(R)]
-        if cleaned_list is None:
-            cleaned_list = [clean_up(t) for t in texts]
-        lettered = [
-            i
-            for i, c in enumerate(cleaned_list)
-            if c != "" and (cat_ids(codes_of(c)) == CAT_LETTER).any()
-        ]
+        cleaned_list, has_letter = (
+            clean_up_batch(texts) if cleaned is None else cleaned
+        )
+        lettered = np.flatnonzero(has_letter).tolist()
         to_score_idx: list[int] = []
         cand_masks: list[np.ndarray] = []
         for c0 in range(0, len(lettered), CHUNK_ROWS):
@@ -301,21 +300,8 @@ class BatchDetector:
         self, conf_rows: list[list[tuple[str, float]]]
     ) -> list[str]:
         """Top-2 decision (LanguageDetector.kt:121-135) per precomputed row."""
-        out = []
-        for confs in conf_rows:
-            if not confs:
-                out.append(L.UNKNOWN)
-            elif len(confs) == 1:
-                out.append(confs[0][0])
-            else:
-                first, second = confs[0][1], confs[1][1]
-                if first == second or (
-                    (first - second) < self.minimum_relative_distance
-                ):
-                    out.append(L.UNKNOWN)
-                else:
-                    out.append(confs[0][0])
-        return out
+        mrd = self.minimum_relative_distance
+        return [decide_confidences(confs, mrd)[0] for confs in conf_rows]
 
     def detect_rows(self, texts: list[str]) -> list[str]:
         return self.decide_rows(self.confidence_rows(texts))

@@ -16,8 +16,9 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from . import langdata as L
-from .core.detector import Detector
-from .core.ngram import extract_ngram_prefix_hashes
+from .core.detector import Detector, decide_confidences
+from .core.ngram import _NP_OFFSET, _NP_PRIME
+from .core.text import CHUNK_ROWS, clean_up, clean_up_batch
 from .ftlangid import FastTextish
 from .models import PackedModels
 from .uniscript import (
@@ -58,39 +59,64 @@ def scrub_text(text: str) -> tuple[str, int]:
 # --- heuristic quality signals ---------------------------------------------
 
 
+_EMPTY_STATS = {
+    "n_chars": 0, "letter_ratio": 0.0, "symbol_ratio": 0.0,
+    "digit_ratio": 0.0, "max_run_ratio": 0.0, "word_repetition": 0.0,
+    "n_words": 0,
+}
+
+
+def text_stats_batch(texts: list[str]) -> list[dict[str, float]]:
+    """Heuristic signals of every row, one ``CHUNK_ROWS`` chunk at a time.
+
+    The chunk's rows are joined with no separator into one code-point
+    blob with a row id per code point. Category counts are one
+    ``np.bincount(row * 5 + cat)``; the ratios are int / int, so exact.
+    The longest identical-character run breaks at every change and at
+    every row start. ``str.split`` stays per row."""
+    out: list[dict[str, float]] = []
+    for c0 in range(0, len(texts), CHUNK_ROWS):
+        rows = texts[c0 : c0 + CHUNK_ROWS]
+        R = len(rows)
+        lens = np.fromiter(map(len, rows), dtype=np.int64, count=R)
+        codes = codes_of("".join(rows))
+        row = np.repeat(np.arange(R), lens)
+        cats = np.bincount(row * 5 + cat_ids(codes), minlength=R * 5)
+        cats = cats.reshape(R, 5).tolist()
+        run_start = np.ones(codes.size, dtype=bool)
+        run_start[1:] = (codes[1:] != codes[:-1]) | (row[1:] != row[:-1])
+        starts = np.flatnonzero(run_start)
+        run_len = np.diff(starts, append=codes.size)
+        # runs are in row order: each nonempty row's runs are one segment
+        full = np.flatnonzero(lens)
+        max_run = np.zeros(R, dtype=np.int64)
+        if full.size:
+            first = np.searchsorted(row[starts], full)
+            max_run[full] = np.maximum.reduceat(run_len, first)
+        for t, n, c, m in zip(rows, lens.tolist(), cats, max_run.tolist()):
+            if n == 0:
+                out.append(dict(_EMPTY_STATS))
+                continue
+            letters, digits, spaces = c[CAT_LETTER], c[CAT_NUMBER], c[CAT_SPACE]
+            symbols = n - letters - digits - spaces
+            words = t.split()
+            n_words = len(words)
+            distinct = len(set(words)) if words else 0
+            out.append({
+                "n_chars": n,
+                "letter_ratio": letters / n,
+                "symbol_ratio": symbols / n,
+                "digit_ratio": digits / n,
+                "max_run_ratio": m / n,
+                "word_repetition": 1.0 - (distinct / n_words) if n_words else 0.0,
+                "n_words": n_words,
+            })
+    return out
+
+
 def text_stats(text: str) -> dict[str, float]:
-    codes = codes_of(text)
-    n = len(codes)
-    if n == 0:
-        return {
-            "n_chars": 0, "letter_ratio": 0.0, "symbol_ratio": 0.0,
-            "digit_ratio": 0.0, "max_run_ratio": 0.0, "word_repetition": 0.0,
-            "n_words": 0,
-        }
-    cats = cat_ids(codes)
-    letters = int((cats == CAT_LETTER).sum())
-    digits = int((cats == CAT_NUMBER).sum())
-    spaces = int((cats == CAT_SPACE).sum())
-    symbols = n - letters - digits - spaces
-    # longest identical-char run
-    if n > 1:
-        changes = np.flatnonzero(np.diff(codes) != 0)
-        run_bounds = np.concatenate(([-1], changes, [n - 1]))
-        max_run = int(np.diff(run_bounds).max())
-    else:
-        max_run = 1
-    words = text.split()
-    n_words = len(words)
-    distinct = len(set(words)) if words else 0
-    return {
-        "n_chars": n,
-        "letter_ratio": letters / n,
-        "symbol_ratio": symbols / n,
-        "digit_ratio": digits / n,
-        "max_run_ratio": max_run / n,
-        "word_repetition": 1.0 - (distinct / n_words) if n_words else 0.0,
-        "n_words": n_words,
-    }
+    """``text_stats_batch`` of one row."""
+    return text_stats_batch([text])[0]
 
 
 # --- perplexity -------------------------------------------------------------
@@ -103,60 +129,67 @@ def trigram_perplexity_batch(
     lang_ords: list[int],
     models: PackedModels,
 ) -> np.ndarray:
-    """Per-row perplexity for a batch; ``lang_ords[i] < 0`` -> inf.
+    """Per-row perplexity: exp(mean negative trigram log-likelihood) under
+    the row's language (``lang_ords[i] < 0`` -> inf), with the detector's
+    prefix backoff; misses get a fixed floor. Rows with no all-letter
+    trigram are inf. Reuses the A1 scoring machinery (SURVEY.md §2).
 
-    Deliberately a plain loop over trigram_perplexity, so every value is
-    bit-identical to the per-row path. A grouped blob variant (rows of
-    one language concatenated, one lookup per depth, per-row means via
-    ``np.add.reduceat``) was measured in-process on 3,000
-    ``corpus.transcripts`` turns, single core, at 38-47 ms/krow against
-    66-80 for this loop. It was deleted because its segment sums run in a
-    different float order and so only match to tolerance. A bit-identical
-    grouped form (per-row ``.mean()`` over slices of one blob) is an open
-    lead; see BENCH/BASELINE.md."""
+    One ``CHUNK_ROWS`` chunk at a time, the rows with a language and at
+    least 3 code points are joined with U+0000 between them. U+0000 is not
+    a letter, so no all-letter window crosses a row. One cumulative FNV
+    pass yields h1/h2/h3 at every position (the same op sequence as
+    ``prefix_hashes`` over window views); each depth of the backoff is one
+    ``models.lookup`` per distinct language. A row's windows are one
+    contiguous slice of the log-probabilities, and its value is
+    ``np.exp(-logp[s:e].mean())``: numpy's pairwise sum depends only on
+    the slice length, so this is the per-row mean bit for bit. Never
+    ``np.add.reduceat`` here: it sums sequentially, a different float
+    order."""
     out = np.full(len(cleaned_list), np.inf, dtype=np.float64)
-    for i, (c, o) in enumerate(zip(cleaned_list, lang_ords)):
-        if o >= 0:
-            out[i] = trigram_perplexity(c, o, models)
+    todo = [
+        i for i, (c, o) in enumerate(zip(cleaned_list, lang_ords))
+        if o >= 0 and len(c) >= 3
+    ]
+    for c0 in range(0, len(todo), CHUNK_ROWS):
+        idx = todo[c0 : c0 + CHUNK_ROWS]
+        rows = [cleaned_list[i] for i in idx]
+        lens = np.fromiter(map(len, rows), dtype=np.int64, count=len(rows))
+        codes = codes_of("\x00".join(rows))
+        B = codes.size
+        letters = cat_ids(codes) == CAT_LETTER
+        cu = codes.astype(np.uint64)
+        with np.errstate(over="ignore"):
+            h1 = (np.uint64(_NP_OFFSET) ^ cu) * np.uint64(_NP_PRIME)
+            h2 = (h1[: B - 1] ^ cu[1:]) * np.uint64(_NP_PRIME)
+            h3 = (h2[: B - 2] ^ cu[2:]) * np.uint64(_NP_PRIME)
+        pos = np.flatnonzero(letters[: B - 2] & letters[1 : B - 1] & letters[2:])
+        # row of each window: rows start at cumsum(lens + 1) - (lens + 1)
+        win_row = np.searchsorted(np.cumsum(lens + 1), pos, side="right")
+        win_ord = np.asarray([lang_ords[i] for i in idx], dtype=np.int64)[win_row]
+        h = (h1[pos], h2[pos], h3[pos])
+        logp = np.full(pos.size, MISS_LOG_PROB, dtype=np.float64)
+        for o in np.unique(win_ord):
+            w = np.flatnonzero(win_ord == o)
+            remaining = np.ones(w.size, dtype=bool)
+            col = np.array([o], dtype=np.int64)
+            for depth in (3, 2, 1):
+                if not remaining.any():  # every window resolved: the
+                    break                # lookups left contribute nothing
+                f = models.lookup(depth, h[depth - 1][w], col)[:, 0]
+                hit = remaining & (f > 0)
+                if hit.any():
+                    logp[w[hit]] = np.log(f[hit].astype(np.float64))
+                remaining &= ~hit
+        ends = np.cumsum(np.bincount(win_row, minlength=len(idx))).tolist()
+        for i, s, e in zip(idx, [0] + ends[:-1], ends):
+            if e > s:
+                out[i] = float(np.exp(-logp[s:e].mean()))
     return out
 
 
 def trigram_perplexity(cleaned: str, lang_ord: int, models: PackedModels) -> float:
-    """exp(mean negative trigram log-likelihood) under the detected
-    language's model, with the detector's prefix backoff; misses get a
-    fixed floor. Reuses the A1 scoring machinery (SURVEY.md §2)."""
-    codes = codes_of(cleaned)
-    letters = cat_ids(codes) == CAT_LETTER
-    if len(codes) < 3:
-        return float("inf")
-    from .core.ngram import _NP_OFFSET, _NP_PRIME
-
-    # one cumulative FNV pass yields h1/h2/h3 at every start position —
-    # bit-identical to prefix_hashes over window views (same op sequence)
-    n = len(codes)
-    cu = codes.astype(np.uint64)
-    with np.errstate(over="ignore"):
-        h1 = (np.uint64(_NP_OFFSET) ^ cu) * np.uint64(_NP_PRIME)
-        h2 = (h1[: n - 1] ^ cu[1:]) * np.uint64(_NP_PRIME)
-        h3 = (h2[: n - 2] ^ cu[2:]) * np.uint64(_NP_PRIME)
-    valid = letters[: n - 2] & letters[1 : n - 1] & letters[2:]
-    if not valid.any():
-        return float("inf")
-    h = np.column_stack((h1[: n - 2][valid], h2[: n - 2][valid], h3[valid]))
-    logp = np.full(h.shape[0], MISS_LOG_PROB, dtype=np.float64)
-    remaining = np.ones(h.shape[0], dtype=bool)
-    col = np.array([lang_ord], dtype=np.int64)
-    for depth in (3, 2, 1):
-        if not remaining.any():  # all windows already resolved: skip
-            break                # remaining lookups (they contribute 0)
-        f = models.lookup(
-            depth, np.ascontiguousarray(h[:, depth - 1]), col
-        )[:, 0]
-        hit = remaining & (f > 0)
-        if hit.any():
-            logp[hit] = np.log(f[hit].astype(np.float64))
-        remaining &= ~hit
-    return float(np.exp(-logp.mean()))
+    """``trigram_perplexity_batch`` of one row."""
+    return float(trigram_perplexity_batch([cleaned], [lang_ord], models)[0])
 
 
 # --- fused assessment -------------------------------------------------------
@@ -191,22 +224,6 @@ RESULT_FIELDS = [
 ]
 
 
-def decide_confidences(
-    confs: list[tuple[str, float]], min_rel_distance: float
-) -> tuple[str, float]:
-    """Top-2 decision (LanguageDetector.kt:121-135): the shared helper for
-    every assessment path, so the batch path's precomputed perplexity is
-    keyed by exactly the decision _finish_assessment would make."""
-    if not confs:
-        return L.UNKNOWN, 0.0
-    if len(confs) == 1:
-        return confs[0]
-    first, second = confs[0][1], confs[1][1]
-    if first == second or (first - second) < min_rel_distance:
-        return L.UNKNOWN, 0.0
-    return confs[0]
-
-
 def _finish_assessment(
     text: str,
     confs: list[tuple[str, float]],
@@ -218,15 +235,14 @@ def _finish_assessment(
     cleaned: str | None = None,
     ft_ord: int | None = None,
     ppl: float | None = None,
+    stats: dict[str, float] | None = None,
 ) -> dict:
     """Everything after detection: decision, cross-check, perplexity,
     heuristics, scrub. Shared by the per-row and batch assessment paths so
     their outputs are identical by construction. The keyword arguments
-    accept batch-precomputed values (assess_batch); when omitted the
-    per-row equivalents are computed here — both paths are bit-identical
-    (pinned by tests/test_quality.py)."""
-    from .core.text import clean_up
-
+    accept batch-precomputed values (assess_batch); when omitted they are
+    computed here by the one-row calls into the same kernels (pinned by
+    tests/test_quality.py)."""
     lang, confidence = decide_confidences(confs, min_rel_distance)
 
     if ft_ord is None:
@@ -243,7 +259,8 @@ def _finish_assessment(
             else float("inf")
         )
 
-    stats = text_stats(text)
+    if stats is None:
+        stats = text_stats(text)
     flags: list[str] = []
     if stats["n_chars"] < config.min_chars:
         flags.append("too_short")
@@ -287,29 +304,32 @@ def assess_batch(
     ft: FastTextish,
     config: QualityConfig,
 ) -> list[dict]:
-    """Batch assessment: vectorized detection (engine.batch) plus batched
-    cleanup / fastText cross-check / perplexity (each bit-identical to its
-    per-row equivalent — round 1 cleaned every text 3x and ran the ft and
-    perplexity stages row-at-a-time, ~50% of pipeline CPU). Output matches
-    assess_text row for row."""
-    from .core.text import clean_up
-
-    cleaned = [clean_up(t) for t in texts]
-    conf_rows = batch_detector.confidence_rows(texts, cleaned_list=cleaned)
+    """Batch assessment, what the Spark UDF runs. Every stage is one
+    cross-row kernel over the batch: clean-up (whose "has a letter" flags
+    detection reuses), detection (engine.batch), the fastText cross-check,
+    perplexity and text stats. Only the decision, the flags and the scrub
+    run per row, in ``_finish_assessment``. Each kernel is bit-identical to
+    its per-row reference (tests/assess_reference.py), so the output
+    matches assess_text row for row."""
+    cleaned, lettered = clean_up_batch(texts)
+    conf_rows = batch_detector.confidence_rows(texts, cleaned=(cleaned, lettered))
     mrd = batch_detector.minimum_relative_distance
-    langs = [decide_confidences(c, mrd)[0] for c in conf_rows]
-    ft_ords = ft.predict_ords(cleaned)
     lang_ords = [
-        L.ORDINAL[lang] if lang != L.UNKNOWN else -1 for lang in langs
+        L.ORDINAL[lang] if lang != L.UNKNOWN else -1
+        for lang in (decide_confidences(c, mrd)[0] for c in conf_rows)
     ]
-    ppls = trigram_perplexity_batch(cleaned, lang_ords, batch_detector.models)
+    ft_ords = ft.predict_ords(cleaned).tolist()
+    ppls = trigram_perplexity_batch(
+        cleaned, lang_ords, batch_detector.models
+    ).tolist()
+    stats = text_stats_batch(texts)
     return [
         _finish_assessment(
             t, confs, mrd, batch_detector.models, ft, config,
-            cleaned=cl, ft_ord=int(fo), ppl=float(p),
+            cleaned=cl, ft_ord=fo, ppl=p, stats=st,
         )
-        for t, confs, cl, fo, p in zip(
-            texts, conf_rows, cleaned, ft_ords, ppls
+        for t, confs, cl, fo, p, st in zip(
+            texts, conf_rows, cleaned, ft_ords, ppls, stats
         )
     ]
 
