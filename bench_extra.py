@@ -12,6 +12,7 @@ Usage:
     python bench_extra.py list                   # registry names
     python bench_extra.py rules [turns] [reps]   # rule-stage size ladder
     python bench_extra.py assess [turns] [reps]  # assess-stage size ladder
+    python bench_extra.py detect [turns] [reps]  # per-text detector callers
 
 Timing policy matches bench.py: one warm-up pass, then ``reps`` timed
 noop-sink passes (min + all samples reported). Data dir / cores from
@@ -42,6 +43,19 @@ batches, one task's share of ``chat_assess`` (3,000 turns, 8
 partitions); every stage is timed in its batch form and through its
 one-row wrapper, min of ``reps``, the two forms are checked equal, and
 the JSON holds the fit ``t = a + b * rows`` of each form and stage.
+
+``detect`` times the three callers that run the detector one text at a
+time, in process, no Spark: ``Detector.confidence_values`` and
+``quality.assess_text`` over ``turns`` perfbench-shaped turns (default
+1500), and ``detect_multi_language`` over ``turns // 4`` texts of four
+turns each, joined as ``a "b": c d`` (a quoted part and a colon between
+turns). The three alternate within each of ``reps`` rounds (default 5);
+the JSON holds the min and median per row (us, ms per multi-language
+text), a sha256 of each caller's outputs and the mean number of potential
+sections per multi-language text. A package on ``$PYTHONPATH`` is imported
+ahead of this checkout's, so ``PYTHONPATH=<other checkout> python
+bench_extra.py detect`` times that checkout with the same harness (the
+JSON's ``package`` names the one that ran).
 """
 
 from __future__ import annotations
@@ -57,6 +71,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
+sys.path[:0] = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -264,8 +279,65 @@ def _assess_ladder(turns: int, reps: int) -> dict:
             "batch_rows": ASSESS_BATCH_ROWS, "sizes": sizes, "fits": fits}
 
 
+def _detect_callers(turns: int, reps: int) -> dict:
+    import hashlib
+    import statistics
+
+    import lingua_spark
+    from lingua_spark.core.detector import Detector
+    from lingua_spark.core.multilang import (
+        detect_multi_language,
+        split_potential_sections,
+    )
+    from lingua_spark.quality import QualityConfig, assess_text
+    from lingua_spark.resources import fasttextish, packed_models
+
+    models, ft, cfg = packed_models(), fasttextish(), QualityConfig()
+    det = Detector(models=models, languages=cfg.languages)
+    rows = _ladder_turns(turns)
+    multi = [f'{a} "{b}": {c} {d}' for a, b, c, d in zip(*[iter(rows)] * 4)]
+    callers = {
+        "confidence_values": (rows, det.confidence_values),
+        "assess_text": (rows, lambda t: assess_text(t, det, ft, cfg)),
+        "detect_multi_language": (
+            multi, lambda t: detect_multi_language(t, det)
+        ),
+    }
+    for texts, fn in callers.values():  # warm-up
+        for t in texts[:20]:
+            fn(t)
+    times: dict[str, list[float]] = {name: [] for name in callers}
+    digests = {}
+    for _ in range(reps):
+        for name, (texts, fn) in callers.items():
+            t0 = time.perf_counter()
+            out = [fn(t) for t in texts]
+            times[name].append((time.perf_counter() - t0) / len(texts))
+            digests[name] = hashlib.sha256(repr(out).encode()).hexdigest()
+    scale = {"confidence_values": 1e6, "assess_text": 1e6,
+             "detect_multi_language": 1e3}
+    return {
+        "mode": "detect",
+        "package": str(Path(lingua_spark.__file__).parent),
+        "turns": len(rows), "multi_texts": len(multi), "reps": reps,
+        "potential_sections_per_text": round(statistics.mean(
+            len(split_potential_sections(t)) for t in multi), 2),
+        "unit": {"confidence_values": "us/row", "assess_text": "us/row",
+                 "detect_multi_language": "ms/text"},
+        "min": {k: round(min(v) * scale[k], 2) for k, v in times.items()},
+        "median": {k: round(statistics.median(v) * scale[k], 2)
+                   for k, v in times.items()},
+        "sha256": digests,
+    }
+
+
 def main() -> None:
     mode = sys.argv[1]
+    if mode == "detect":
+        turns = int(sys.argv[2]) if len(sys.argv) > 2 else 1500
+        reps = int(sys.argv[3]) if len(sys.argv) > 3 else 5
+        print(json.dumps(_detect_callers(turns, reps)))
+        return
     if mode == "rules":
         turns = int(sys.argv[2]) if len(sys.argv) > 2 else 3000
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3

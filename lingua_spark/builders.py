@@ -2,13 +2,13 @@
 `api/LanguageDetectorBuilder.kt` (factory constructors :177-283, fluent
 setters :50-146) and `api/Language.kt` company helpers (:341-406).
 
-The built artifacts are this engine's detectors: ``build()`` returns the
-per-row ``core.detector.Detector``, ``build_batch()`` the vectorized
-``engine.batch.BatchDetector`` (what the Spark UDFs run), and
-``quality_config()`` the equivalent ``QualityConfig`` for the fused
-quality pipeline. Validation mirrors the reference: at least two
-languages (``MISSING_LANGUAGE_MESSAGE``, LanguageDetectorBuilder.kt:225),
-minimum relative distance in 0.0..0.99 (:73).
+The built artifacts are this engine's detector, ``core.detector.Detector``
+(what the Spark UDFs run), from ``build()`` or its older name
+``build_batch()``, and ``quality_config()`` the equivalent
+``QualityConfig`` for the fused quality pipeline. Validation mirrors the
+reference: at least two languages (``MISSING_LANGUAGE_MESSAGE``,
+LanguageDetectorBuilder.kt:225), minimum relative distance in 0.0..0.99
+(:73).
 """
 
 from __future__ import annotations
@@ -178,7 +178,7 @@ class LanguageDetectorBuilder:
 
     # -- terminal builders -------------------------------------------------
     def build(self):
-        """Per-row detector (the reference's LanguageDetector analog)."""
+        """The detector (the reference's LanguageDetector analog)."""
         from .core.detector import Detector
         from .resources import packed_models
 
@@ -190,16 +190,8 @@ class LanguageDetectorBuilder:
         )
 
     def build_batch(self):
-        """Vectorized batch detector (what the Spark UDFs run)."""
-        from .engine.batch import BatchDetector
-        from .resources import packed_models
-
-        return BatchDetector(
-            models=packed_models(),
-            languages=self.languages,
-            minimum_relative_distance=self.minimum_relative_distance,
-            low_accuracy=self.low_accuracy,
-        )
+        """``build()``: one detector class serves single texts and batches."""
+        return self.build()
 
     def quality_config(self):
         """QualityConfig for the fused quality-filter pipeline / UDFs."""

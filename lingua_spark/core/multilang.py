@@ -29,8 +29,8 @@ import numpy as np
 from .. import langdata as L
 from ..uniscript import SCRIPT_ID, cat_ids, codes_of, is_letter, script_ids
 from .detector import decide_confidences
-from .rules import detect_language_with_rules, filter_languages_by_rules
-from .text import is_logogram_char, word_spans
+from .rules import UNKNOWN_ORD, rules_batch
+from .text import is_logogram_char
 
 MIN_SECTION_LENGTH = 3  # letters (MultiLanguageDetection.kt:185)
 MIN_RELIABLE_LETTERS = 15  # (:469)
@@ -168,19 +168,20 @@ def split_potential_sections(text: str) -> list[Section]:
 
 
 def _sections_with_rule_languages(text: str, detector) -> list[Section]:
-    """W2: per-section rule detection + same-single-language merge."""
+    """W2: rule detection of every potential section, one ``rules_batch``
+    call over the text's sections, then the same-single-language merge."""
+    sections = split_potential_sections(text)
+    if not sections:
+        return []
+    rule_ords, masks = rules_batch(
+        [s.text() for s in sections], detector.languages
+    )
     out: list[Section] = []
-    for section in split_potential_sections(text):
-        sect_text = section.text()
-        sect_codes = codes_of(sect_text)
-        spans = word_spans(sect_codes)
-        lang = detect_language_with_rules(sect_codes, spans, detector.languages)
-        if lang != L.UNKNOWN:
-            langs = {lang}
+    for section, o, mask in zip(sections, rule_ords, masks):
+        if o != UNKNOWN_ORD:
+            langs = {L.LANGUAGES[o].name}
         else:
-            langs = set(
-                filter_languages_by_rules(sect_codes, spans, detector.languages)
-            )
+            langs = {L.LANGUAGES[i].name for i in np.flatnonzero(mask)}
         prev = out[-1] if out else None
         if (
             len(langs) == 1
@@ -210,7 +211,8 @@ def _should_merge_short_section(
     ):
         cur_confs = dict(detector.confidence_values(current.text()))
         min_conf = current.min_confidence()
-        next_confs = dict(detector.confidence_values(nxt.text()))
+        next_ordered = detector.confidence_values(nxt.text())
+        next_confs = dict(next_ordered)
         min_next_conf = nxt.min_confidence()
 
         common = [lg for lg, c in cur_confs.items() if c > min_conf]
@@ -219,7 +221,6 @@ def _should_merge_short_section(
 
         if previous is not None:
             prev_confs = previous.confidences(detector)
-            next_ordered = detector.confidence_values(nxt.text())
             if prev_confs and next_ordered:
                 next_top = next_ordered[0][0]
                 prev_top = prev_confs[0][0]

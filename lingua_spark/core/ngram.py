@@ -13,7 +13,6 @@ the summed set is identical).
 from __future__ import annotations
 
 import numpy as np
-from numpy.lib.stride_tricks import sliding_window_view
 
 FNV_OFFSET = 0xCBF29CE484222325
 FNV_PRIME = 0x100000001B3
@@ -42,26 +41,3 @@ def prefix_hashes(windows: np.ndarray) -> np.ndarray:
             out[:, j] = h
     return out
 
-
-def extract_ngram_prefix_hashes(
-    codes: np.ndarray, letter_mask: np.ndarray, n: int
-) -> np.ndarray:
-    """Distinct letter-only n-gram windows of ``codes``.
-
-    Returns a (k, n) uint64 matrix of prefix hashes, rows sorted ascending
-    by the full-ngram hash (column n-1), deduplicated on that column.
-    Windows containing any non-letter are skipped
-    (TestDataLanguageModel.kt:52-61).
-    """
-    if len(codes) < n:
-        return np.empty((0, n), dtype=np.uint64)
-    wins = sliding_window_view(codes, n)
-    valid = sliding_window_view(letter_mask, n).all(axis=1)
-    wins = wins[valid]
-    if wins.shape[0] == 0:
-        return np.empty((0, n), dtype=np.uint64)
-    h = prefix_hashes(wins)
-    # np.unique returns sorted values; idx are indices of first occurrences,
-    # so h[idx] rows come out sorted ascending by full-ngram hash.
-    _, idx = np.unique(h[:, -1], return_index=True)
-    return h[idx]

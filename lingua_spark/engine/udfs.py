@@ -194,10 +194,9 @@ def make_assess_udf(spark: SparkSession, config: QualityConfig | None = None):
     def assess(texts: pd.Series) -> pd.DataFrame:
         worker_setup()
         from ..quality import assess_batch
-        from .batch import BatchDetector
 
         models, weights, cfg = bc.value
-        bdet = BatchDetector(
+        det = Detector(
             models=models,
             languages=cfg.languages,
             minimum_relative_distance=cfg.minimum_relative_distance,
@@ -205,7 +204,7 @@ def make_assess_udf(spark: SparkSession, config: QualityConfig | None = None):
         )
         ft = FastTextish(weights=weights)
         clean = [t if isinstance(t, str) else "" for t in texts]
-        rows = assess_batch(clean, bdet, ft, cfg)
+        rows = assess_batch(clean, det, ft, cfg)
         for r in rows:
             r["lang"] = _iso(r["lang"])
             r["ft_lang"] = _iso(r["ft_lang"])
@@ -275,18 +274,16 @@ def make_detect_udf(spark: SparkSession, config: QualityConfig | None = None):
     @F.pandas_udf(DETECT_SCHEMA)
     def detect(texts: pd.Series) -> pd.DataFrame:
         worker_setup()
-        from .batch import BatchDetector
-
         models, cfg = bc.value
-        bdet = BatchDetector(
+        det = Detector(
             models=models,
             languages=cfg.languages,
             minimum_relative_distance=cfg.minimum_relative_distance,
             low_accuracy=cfg.low_accuracy,
         )
         clean = [t if isinstance(t, str) else "" for t in texts]
-        conf_rows = bdet.confidence_rows(clean)
-        names = bdet.decide_rows(conf_rows)
+        conf_rows = det.confidence_rows(clean)
+        names = det.decide_rows(conf_rows)
         out = []
         for name, confs in zip(names, conf_rows):
             top = confs[0][1] if confs and name != L.UNKNOWN else 0.0

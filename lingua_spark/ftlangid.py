@@ -118,7 +118,7 @@ class FastTextish:
                     offsets, offsets[lo] + _GATHER_BUCKETS, side="right"
                 )) - 1)
                 # reduceat over nonempty starts only: each segment then
-                # ends at the next nonempty start (see engine.batch._seg_sums)
+                # ends at the next nonempty start (see core.detector._seg_sums)
                 ne = lo + np.flatnonzero(nonempty[lo:hi])
                 if ne.size:
                     g = np.take(self.weights, b[offsets[lo] : offsets[hi]], axis=0)

@@ -8,8 +8,9 @@ engine (their behavior is pinned by unit tests ported from the reference's
 model-free test suite, `src/test/.../api/LanguageDetectorTest.kt`).
 
 Summation order is the engine's defined order: distinct n-grams ascending
-by FNV-1a hash, one contiguous float64 np.sum per language — bit-identical
-to the engine's transpose-contiguous matrix sums.
+by FNV-1a hash, summed left to right by one ``np.add.reduceat(vec, [0])``
+per language — the sequential order of the engine's per-row segment sums
+(``core.detector._seg_sums``), so the two agree bit for bit.
 """
 
 from __future__ import annotations

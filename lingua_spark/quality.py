@@ -18,7 +18,7 @@ import numpy as np
 from . import langdata as L
 from .core.detector import Detector, decide_confidences
 from .core.ngram import _NP_OFFSET, _NP_PRIME
-from .core.text import CHUNK_ROWS, clean_up, clean_up_batch
+from .core.text import CHUNK_ROWS, clean_up_batch
 from .ftlangid import FastTextish
 from .models import PackedModels
 from .uniscript import (
@@ -227,40 +227,20 @@ RESULT_FIELDS = [
 def _finish_assessment(
     text: str,
     confs: list[tuple[str, float]],
-    min_rel_distance: float,
-    models: PackedModels,
-    ft: FastTextish,
+    decision: tuple[str, float],
+    ft_ord: int,
+    ppl: float,
+    stats: dict[str, float],
     config: QualityConfig,
-    *,
-    cleaned: str | None = None,
-    ft_ord: int | None = None,
-    ppl: float | None = None,
-    stats: dict[str, float] | None = None,
 ) -> dict:
-    """Everything after detection: decision, cross-check, perplexity,
-    heuristics, scrub. Shared by the per-row and batch assessment paths so
-    their outputs are identical by construction. The keyword arguments
-    accept batch-precomputed values (assess_batch); when omitted they are
-    computed here by the one-row calls into the same kernels (pinned by
-    tests/test_quality.py)."""
-    lang, confidence = decide_confidences(confs, min_rel_distance)
-
-    if ft_ord is None:
-        ft_ord = ft.predict_ord(text)
+    """One row's result from its batch-kernel values: ``decision`` is
+    ``decide_confidences(confs, ...)``, ``ft_ord`` / ``ppl`` / ``stats``
+    the row's ft cross-check ordinal, perplexity and text stats. Adds the
+    flags and the scrub, the only stages that run per row."""
+    lang, confidence = decision
     ft_lang = L.UNKNOWN if ft_ord < 0 else L.LANGUAGES[ft_ord].name
     agree = lang != L.UNKNOWN and ft_lang == lang
 
-    if cleaned is None:
-        cleaned = clean_up(text)
-    if ppl is None:
-        ppl = (
-            trigram_perplexity(cleaned, L.ORDINAL[lang], models)
-            if lang != L.UNKNOWN
-            else float("inf")
-        )
-
-    if stats is None:
-        stats = text_stats(text)
     flags: list[str] = []
     if stats["n_chars"] < config.min_chars:
         flags.append("too_short")
@@ -298,40 +278,51 @@ def _finish_assessment(
     }
 
 
-def assess_batch(
+def assess_confidences(
     texts: list[str],
-    batch_detector,
+    conf_rows: list[list[tuple[str, float]]],
+    cleaned: list[str],
+    min_rel_distance: float,
+    models: PackedModels,
     ft: FastTextish,
     config: QualityConfig,
 ) -> list[dict]:
-    """Batch assessment, what the Spark UDF runs. Every stage is one
-    cross-row kernel over the batch: clean-up (whose "has a letter" flags
-    detection reuses), detection (engine.batch), the fastText cross-check,
-    perplexity and text stats. Only the decision, the flags and the scrub
-    run per row, in ``_finish_assessment``. Each kernel is bit-identical to
-    its per-row reference (tests/assess_reference.py), so the output
-    matches assess_text row for row."""
-    cleaned, lettered = clean_up_batch(texts)
-    conf_rows = batch_detector.confidence_rows(texts, cleaned=(cleaned, lettered))
-    mrd = batch_detector.minimum_relative_distance
+    """Everything after detection, for rows whose confidences are given
+    (``cleaned`` is ``clean_up_batch(texts)[0]``): the decision, then the
+    fastText cross-check, perplexity and text stats as one cross-row
+    kernel each, then ``_finish_assessment`` per row."""
+    decisions = [decide_confidences(c, min_rel_distance) for c in conf_rows]
     lang_ords = [
-        L.ORDINAL[lang] if lang != L.UNKNOWN else -1
-        for lang in (decide_confidences(c, mrd)[0] for c in conf_rows)
+        L.ORDINAL[lang] if lang != L.UNKNOWN else -1 for lang, _ in decisions
     ]
     ft_ords = ft.predict_ords(cleaned).tolist()
-    ppls = trigram_perplexity_batch(
-        cleaned, lang_ords, batch_detector.models
-    ).tolist()
+    ppls = trigram_perplexity_batch(cleaned, lang_ords, models).tolist()
     stats = text_stats_batch(texts)
     return [
-        _finish_assessment(
-            t, confs, mrd, batch_detector.models, ft, config,
-            cleaned=cl, ft_ord=fo, ppl=p, stats=st,
-        )
-        for t, confs, cl, fo, p, st in zip(
-            texts, conf_rows, cleaned, ft_ords, ppls, stats
+        _finish_assessment(t, confs, d, fo, p, st, config)
+        for t, confs, d, fo, p, st in zip(
+            texts, conf_rows, decisions, ft_ords, ppls, stats
         )
     ]
+
+
+def assess_batch(
+    texts: list[str],
+    detector: Detector,
+    ft: FastTextish,
+    config: QualityConfig,
+) -> list[dict]:
+    """Assessment of every row, what the Spark UDF runs. Every stage is one
+    cross-row kernel over the batch: clean-up (whose "has a letter" flags
+    detection reuses), detection, the fastText cross-check, perplexity and
+    text stats. Only the flags and the scrub run per row. Each kernel is
+    bit-identical to its per-row reference (tests/assess_reference.py)."""
+    cleaned, lettered = clean_up_batch(texts)
+    conf_rows = detector.confidence_rows(texts, cleaned=(cleaned, lettered))
+    return assess_confidences(
+        texts, conf_rows, cleaned, detector.minimum_relative_distance,
+        detector.models, ft, config,
+    )
 
 
 def assess_text(
@@ -340,10 +331,5 @@ def assess_text(
     ft: FastTextish,
     config: QualityConfig,
 ) -> dict:
-    """Full per-turn assessment (per-row reference path; the Spark UDF uses
-    assess_batch, which must match this row for row)."""
-    confs = detector.confidence_values(text)
-    return _finish_assessment(
-        text, confs, detector.minimum_relative_distance,
-        detector.models, ft, config,
-    )
+    """``assess_batch`` of one text."""
+    return assess_batch([text], detector, ft, config)[0]

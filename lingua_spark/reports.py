@@ -19,7 +19,7 @@ from __future__ import annotations
 import pandas as pd
 
 from . import langdata as L
-from .engine.batch import BatchDetector
+from .core.detector import Detector
 from .models import PackedModels
 
 
@@ -27,8 +27,8 @@ def predict_corpus(
     corpus: pd.DataFrame, models: PackedModels, low_accuracy: bool = False
 ) -> pd.DataFrame:
     """corpus: (lang iso1, category, item_id, text) -> + predicted iso1."""
-    bdet = BatchDetector(models=models, low_accuracy=low_accuracy)
-    preds = bdet.detect_rows(corpus["text"].tolist())
+    det = Detector(models=models, low_accuracy=low_accuracy)
+    preds = det.detect_rows(corpus["text"].tolist())
     out = corpus.copy()
     out["predicted"] = [
         "unknown" if p == L.UNKNOWN else L.BY_NAME[p].iso1 for p in preds

@@ -43,21 +43,20 @@ _ORA = _MODELS = _FT = _CFG = None
 
 
 def _label_chunk(texts: list[str]) -> list[tuple[bool, str, str]]:
-    from lingua_spark.quality import _finish_assessment
+    from lingua_spark.core.text import clean_up_batch
+    from lingua_spark.quality import assess_confidences
 
-    out = []
-    for text in texts:
-        text = text if isinstance(text, str) else ""
-        r = _finish_assessment(
-            text,
-            _ORA.confidence_values(text),
-            _CFG.minimum_relative_distance,
-            _MODELS,
-            _FT,
-            _CFG,
-        )
-        out.append((bool(r["keep"]), r["scrubbed_text"], r["lang"]))
-    return out
+    texts = [t if isinstance(t, str) else "" for t in texts]
+    rows = assess_confidences(
+        texts,
+        [_ORA.confidence_values(t) for t in texts],
+        clean_up_batch(texts)[0],
+        _CFG.minimum_relative_distance,
+        _MODELS,
+        _FT,
+        _CFG,
+    )
+    return [(bool(r["keep"]), r["scrubbed_text"], r["lang"]) for r in rows]
 
 
 def main() -> None:

@@ -4,7 +4,7 @@ so the driver's DuckDB oracle gate can check them (VERDICT r01 item 2):
 - ann_lsh_topk            <- NumPy re-computation (ops.similarity.expected_ann_topk)
 - detect_language_counts  <- pure-Python dict oracle (lingua_spark.oracle)
 - quality_pipeline_summary<- dict-oracle detection + shared quality functions
-- multilang_sections      <- core.multilang over the per-row Detector
+- multilang_sections      <- core.multilang over the dict oracle
 
 Each fixture is the expected result at ONE sf dir (the driver runs the
 correctness gate at sf0.01). oracle_sql() for these queries is then
@@ -118,32 +118,37 @@ def gen_detect_per_doc(docs: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def gen_quality_summary(docs: pd.DataFrame) -> pd.DataFrame:
-    """Replicates documents_as_transcripts + assess_turns + groupBy(lang):
-    detection via the dict oracle, finishing via the shared quality
-    functions (quality._finish_assessment — same code the UDF runs, fed
-    with oracle confidences)."""
+def oracle_assessments(docs: pd.DataFrame) -> list[dict]:
+    """Quality assessment of every document with the dict oracle's
+    confidences in place of the detector's."""
+    from lingua_spark.core.text import clean_up_batch
     from lingua_spark.oracle import OracleDetector
-    from lingua_spark.quality import QualityConfig, _finish_assessment
+    from lingua_spark.quality import QualityConfig, assess_confidences
     from lingua_spark.resources import fasttextish, oracle_tables, packed_models
 
     ora = OracleDetector(tables=oracle_tables())
-    models = packed_models()
-    ft = fasttextish()
     cfg = QualityConfig()
+    texts = [t if isinstance(t, str) else "" for t in docs["text"]]
+    return assess_confidences(
+        texts,
+        [ora.confidence_values(t) for t in texts],
+        clean_up_batch(texts)[0],
+        cfg.minimum_relative_distance,
+        packed_models(),
+        fasttextish(),
+        cfg,
+    )
+
+
+def gen_quality_summary(docs: pd.DataFrame) -> pd.DataFrame:
+    """Replicates documents_as_transcripts + assess_turns + groupBy(lang):
+    detection via the dict oracle, finishing via the shared quality
+    functions (quality.assess_confidences — same code the UDF runs, fed
+    with oracle confidences)."""
     rows = []
     # documents_as_transcripts: conv = doc_id % 50, turn = doc_id / 50 —
     # every (conv, turn) is unique, so stable-order dedup keeps all rows.
-    for text in docs["text"]:
-        confs = ora.confidence_values(text if isinstance(text, str) else "")
-        r = _finish_assessment(
-            text if isinstance(text, str) else "",
-            confs,
-            cfg.minimum_relative_distance,
-            models,
-            ft,
-            cfg,
-        )
+    for r in oracle_assessments(docs):
         rows.append(
             (
                 iso(r["lang"]),
@@ -166,21 +171,8 @@ def gen_quality_flag_counts(docs: pd.DataFrame) -> pd.DataFrame:
     counted."""
     from collections import Counter
 
-    from lingua_spark.oracle import OracleDetector
-    from lingua_spark.quality import QualityConfig, _finish_assessment
-    from lingua_spark.resources import fasttextish, oracle_tables, packed_models
-
-    ora = OracleDetector(tables=oracle_tables())
-    models = packed_models()
-    ft = fasttextish()
-    cfg = QualityConfig()
     counts: Counter[str] = Counter()
-    for text in docs["text"]:
-        t = text if isinstance(text, str) else ""
-        confs = ora.confidence_values(t)
-        r = _finish_assessment(
-            t, confs, cfg.minimum_relative_distance, models, ft, cfg
-        )
+    for r in oracle_assessments(docs):
         counts.update(r["quality_flags"] or ["_clean"])
     return pd.DataFrame(
         sorted(counts.items()), columns=["flag", "n_turns"]

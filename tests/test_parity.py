@@ -93,34 +93,47 @@ def test_minimum_relative_distance(packed_models):
         assert det_hi.detect(text) == "UNKNOWN"
 
 
-def test_batch_engine_exact_parity(packed_models):
-    """BatchDetector (cross-row vectorized) must match the per-row engine
-    bit-for-bit: same confidences, same decisions."""
+def test_one_detector_class():
+    """The batch engine's name is the same class: one scoring path."""
+    from lingua_spark.engine.batch import BatchDetector
+
+    assert Detector is BatchDetector
+
+
+def test_batch_engine_exact_parity(packed_models, oracle_tables):
+    """A multi-row batch must match each row on its own (a one-row batch)
+    and the independent dict oracle bit-for-bit: same confidences, same
+    decisions."""
     from lingua_spark.engine.batch import BatchDetector
 
     det = Detector(models=packed_models)
     bdet = BatchDetector(models=packed_models)
+    ora = OracleDetector(tables=oracle_tables)
     acc = accuracy_corpus(per_category=3)
+    # the last row has no 5-letter window: a trailing empty segment
     texts = acc.text.tolist() + ["", "3<856%)§", "びさ", "日本語です",
-                                 "this is a short test"]
+                                 "this is a short test", "ab cd ef gh"]
     batch = bdet.confidence_rows(texts)
     names = bdet.decide_rows(batch)
     for i, t in enumerate(texts):
         assert det.confidence_values(t) == batch[i], t
+        assert ora.confidence_values(t) == batch[i], t
         assert det.detect(t) == names[i], t
 
 
-def test_batch_trailing_empty_window_rows(packed_models):
+def test_batch_trailing_empty_window_rows(packed_models, oracle_tables):
     """Regression (round 2): a chunk row whose cleaned text is long enough
     to request length-n scoring but has NO valid n-windows (all windows
     cross spaces) used to truncate the PREVIOUS row's segment sum by one
     window when it trailed the chunk — _seg_sums clamped its out-of-range
-    start offset into the last row's segment. The batch engine must match
-    the per-row engine with such rows in every position."""
+    start offset into the last row's segment. A multi-row batch must match
+    each row on its own and the dict oracle with such rows in every
+    position."""
     from lingua_spark.engine.batch import BatchDetector
 
     det = Detector(models=packed_models)
     bdet = BatchDetector(models=packed_models)
+    ora = OracleDetector(tables=oracle_tables)
     rich = "по як би і ло на митузу і би веґдуєца що річка не"
     # 'ab cd ef' has length >= 5 but no 5-letter window
     empty5 = "ab cd ef gh"
@@ -133,14 +146,15 @@ def test_batch_trailing_empty_window_rows(packed_models):
         batch = bdet.confidence_rows(texts)
         for i, t in enumerate(texts):
             assert det.confidence_values(t) == batch[i], (texts, t)
+            assert ora.confidence_values(t) == batch[i], (texts, t)
 
 
 def test_batch_parity_at_scale_sf01(packed_models):
     """Chunk-level parity on REAL driver data at sf0.1 (5000 documents):
     the batch engine chunks rows 512 at a time, and chunk-composition
     bugs (e.g. the round-2 _seg_sums trailing-empty-row truncation) only
-    surface with many heterogeneous rows. Decisions must match the
-    per-row engine on every document."""
+    surface with many heterogeneous rows. Decisions must match each
+    document detected on its own (a one-row batch)."""
     import pandas as pd
 
     from lingua_spark.engine.batch import BatchDetector

@@ -229,11 +229,13 @@ def test_no_ngram_probabilities_returns_unknown(packed_models):
 
 def test_builder_validation(packed_models):
     from lingua_spark.core.detector import Detector
+    from lingua_spark.engine.batch import BatchDetector
 
-    with pytest.raises(ValueError):
-        Detector(models=packed_models, minimum_relative_distance=1.5)
-    with pytest.raises(ValueError):
-        Detector(models=packed_models, languages=())
+    for cls in (Detector, BatchDetector):
+        with pytest.raises(ValueError):
+            cls(models=packed_models, minimum_relative_distance=1.5)
+        with pytest.raises(ValueError):
+            cls(models=packed_models, languages=())
 
 
 def test_detection_is_deterministic(packed_models):
