@@ -13,6 +13,7 @@ Usage:
     python bench_extra.py rules [turns] [reps]   # rule-stage size ladder
     python bench_extra.py assess [turns] [reps]  # assess-stage size ladder
     python bench_extra.py detect [turns] [reps]  # per-text detector callers
+    python bench_extra.py setup [reps]           # model set-up split
 
 Timing policy matches bench.py: one warm-up pass, then ``reps`` timed
 noop-sink passes (min + all samples reported). Data dir / cores from
@@ -56,6 +57,15 @@ sections per multi-language text. A package on ``$PYTHONPATH`` is imported
 ahead of this checkout's, so ``PYTHONPATH=<other checkout> python
 bench_extra.py detect`` times that checkout with the same harness (the
 JSON's ``package`` names the one that ran).
+
+``setup`` splits the model set-up a detector-building process pays. Each
+of ``reps`` reps (default 5) runs in a fresh Python subprocess, which
+times, in order: the package import, ``model_table()``,
+``packed_models()``, ``fasttextish()``, ``build_package_zip()`` (and the
+zip's size), a ``local[4]`` session, the first and the second
+``make_assess_udf`` and then a ``make_detect_udf``. The JSON holds every
+rep and the min and median of each step. ``$PYTHONPATH`` selects the
+checkout as for ``detect``; the subprocesses inherit it.
 """
 
 from __future__ import annotations
@@ -331,8 +341,74 @@ def _detect_callers(turns: int, reps: int) -> dict:
     }
 
 
+def _setup_once() -> dict:
+    """One cold model set-up, timed step by step (run in a fresh process)."""
+    import importlib
+
+    t = {}
+
+    def step(name, fn):
+        t0 = time.perf_counter()
+        out = fn()
+        t[name] = round(time.perf_counter() - t0, 4)
+        return out
+
+    resources = step("import_s", lambda: importlib.import_module(
+        "lingua_spark.resources"))
+    from lingua_spark.engine.udfs import (
+        build_package_zip,
+        make_assess_udf,
+        make_detect_udf,
+    )
+    from lingua_spark.engine.pipeline import build_session
+
+    step("model_table_s", resources.model_table)
+    step("packed_models_s", resources.packed_models)
+    step("fasttextish_s", resources.fasttextish)
+    zip_path = step("build_package_zip_s", build_package_zip)
+    t["zip_mb"] = round(os.path.getsize(zip_path) / 1e6, 2)
+    os.remove(zip_path)
+    spark = step("session_s", lambda: build_session(
+        app="lingua-spark-bench-extra-setup", master="local[4]"))
+    spark.sparkContext.setLogLevel("ERROR")
+    step("make_assess_udf_1_s", lambda: make_assess_udf(spark))
+    step("make_assess_udf_2_s", lambda: make_assess_udf(spark))
+    step("make_detect_udf_s", lambda: make_detect_udf(spark))
+    spark.stop()
+    return {"package": str(Path(resources.__file__).parent), "times": t}
+
+
+def _setup_split(reps: int) -> dict:
+    import statistics
+    import subprocess
+
+    runs = []
+    for _ in range(reps):
+        out = subprocess.run(
+            [sys.executable, str(Path(__file__).resolve()), "_setup_once"],
+            check=True, capture_output=True, text=True,
+        ).stdout
+        runs.append(json.loads(out.strip().splitlines()[-1]))
+    package = runs[0]["package"]
+    runs = [r["times"] for r in runs]
+    return {
+        "mode": "setup", "package": package, "reps": reps,
+        "min": {k: min(r[k] for r in runs) for k in runs[0]},
+        "median": {k: round(statistics.median(r[k] for r in runs), 4)
+                   for k in runs[0]},
+        "runs": runs,
+    }
+
+
 def main() -> None:
     mode = sys.argv[1]
+    if mode == "_setup_once":
+        print(json.dumps(_setup_once()))
+        return
+    if mode == "setup":
+        reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+        print(json.dumps(_setup_split(reps)))
+        return
     if mode == "detect":
         turns = int(sys.argv[2]) if len(sys.argv) > 2 else 1500
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 5

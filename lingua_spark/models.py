@@ -25,7 +25,7 @@ import numpy as np
 import pandas as pd
 
 from . import langdata as L
-from .core.ngram import fnv1a
+from .core.ngram import FNV_OFFSET, prefix_hashes
 from .core.text import clean_up
 from .uniscript import CAT_LETTER, cat_ids, codes_of
 
@@ -74,6 +74,22 @@ def read_model_table(path: str | Path) -> pd.DataFrame:
     return pd.read_parquet(path)
 
 
+def _hash_ngrams(ngrams: np.ndarray) -> np.ndarray:
+    """FNV-1a 64 of each string, equal to ``fnv1a``: the strings' code
+    points are joined once, and the strings of each code-point length are
+    hashed together as one (rows, length) window array."""
+    lens = np.fromiter(map(len, ngrams), dtype=np.int64, count=len(ngrams))
+    codes = np.frombuffer(
+        "".join(ngrams).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+    starts = np.cumsum(lens) - lens
+    out = np.full(len(ngrams), FNV_OFFSET, dtype=np.uint64)
+    for k in np.unique(lens[lens > 0]):
+        rows = np.flatnonzero(lens == k)
+        out[rows] = prefix_hashes(codes[starts[rows, None] + np.arange(k)])[:, -1]
+    return out
+
+
 def _lang_groups() -> dict[str, np.ndarray]:
     """Language groups keyed by primary script (scripts[0]): a language's
     model rows all live in its group's block."""
@@ -111,35 +127,52 @@ class PackedModels:
 
     @classmethod
     def from_table(cls, df: pd.DataFrame) -> "PackedModels":
+        """Pack a ``(lang, n, ngram, freq)`` table with array work only.
+
+        Every n-gram is hashed by ``_hash_ngrams`` (FNV-1a by the string's
+        own code-point length, equal to the scalar ``fnv1a``). One stable
+        ``lexsort`` on (n, group) then lays each (n, group) block out as a
+        contiguous run that keeps the table's row order, and
+        ``np.unique(..., return_inverse=True)`` gives the block's sorted
+        keys and each row's matrix row; frequencies are written in table
+        order. Rows of a language outside ``langdata`` are dropped.
+        ``tests/models_reference.py`` keeps the former per-n-gram packer
+        (scalar ``fnv1a`` and a pandas ``groupby``), which the blocks are
+        checked against bit for bit."""
         groups = _lang_groups()
-        lang_group = {}
-        for g, ords in groups.items():
-            for o in ords:
-                lang_group[L.LANGUAGES[o].name] = g
+        names = sorted(groups)  # blocks in (n, group name) order
         local_col = {}
-        for g, ords in groups.items():
+        group_rank = np.full(L.N_LANGUAGES, -1, dtype=np.int64)
+        for rank, g in enumerate(names):
+            ords = groups[g]
             lc = np.full(L.N_LANGUAGES, -1, dtype=np.int64)
             lc[ords] = np.arange(len(ords))
             local_col[g] = lc
+            group_rank[ords] = rank
+        lang_ord = (
+            df["lang"].map(L.ORDINAL).fillna(-1).to_numpy(dtype=np.int64)
+        )
+        kept = np.flatnonzero(lang_ord >= 0)
+        ns = df["n"].to_numpy(dtype=np.int64)[kept]
+        # stable: within a block, rows keep the table's order
+        by_block = np.lexsort((group_rank[lang_ord[kept]], ns))
+        order, ns = kept[by_block], ns[by_block]
+        lang_ord = lang_ord[order]
+        rank = group_rank[lang_ord]
+        hashes = _hash_ngrams(df["ngram"].to_numpy(dtype=object))[order]
+        freq = df["freq"].to_numpy(dtype=np.float32)[order]
+        first = np.ones(len(order), dtype=bool)  # a block's first row
+        first[1:] = (ns[1:] != ns[:-1]) | (rank[1:] != rank[:-1])
+        starts = np.flatnonzero(first)
         keys: dict[tuple[int, str], np.ndarray] = {}
         freqs: dict[tuple[int, str], np.ndarray] = {}
-        df = df.assign(group=df["lang"].map(lang_group))
-        for (n, g), sub in df.groupby(["n", "group"], observed=True):
-            n = int(n)
-            h = np.fromiter(
-                (fnv1a(gr) for gr in sub["ngram"]),
-                dtype=np.uint64,
-                count=len(sub),
-            )
-            uniq = np.unique(h)
+        for s, e in zip(starts, np.append(starts[1:], len(order))):
+            g = names[rank[s]]
+            uniq, rows = np.unique(hashes[s:e], return_inverse=True)
             mat = np.zeros((len(uniq), len(groups[g])), dtype=np.float32)
-            rows = np.searchsorted(uniq, h)
-            cols = local_col[g][
-                sub["lang"].map(L.ORDINAL).to_numpy(dtype=np.int64)
-            ]
-            mat[rows, cols] = sub["freq"].to_numpy(dtype=np.float32)
-            keys[(n, g)] = uniq
-            freqs[(n, g)] = mat
+            mat[rows, local_col[g][lang_ord[s:e]]] = freq[s:e]
+            keys[(int(ns[s]), g)] = uniq
+            freqs[(int(ns[s]), g)] = mat
         return cls(
             groups=groups, keys=keys, freqs=freqs, local_col=local_col
         )
