@@ -14,6 +14,7 @@ Usage:
     python bench_extra.py assess [turns] [reps]  # assess-stage size ladder
     python bench_extra.py detect [turns] [reps]  # per-text detector callers
     python bench_extra.py setup [reps]           # model set-up split
+    python bench_extra.py kernels [docs] [reps]  # ops-kernel size ladder
 
 Timing policy matches bench.py: one warm-up pass, then ``reps`` timed
 noop-sink passes (min + all samples reported). Data dir / cores from
@@ -66,6 +67,17 @@ zip's size), a ``local[4]`` session, the first and the second
 ``make_assess_udf`` and then a ``make_detect_udf``. The JSON holds every
 rep and the min and median of each step. ``$PYTHONPATH`` selects the
 checkout as for ``detect``; the subprocesses inherit it.
+
+``kernels`` is the size ladder of the two cross-row ``ops`` kernels of
+the dedup chain, in process, no Spark: perfbench-shaped documents
+(``perfbench.inputs.documents``) at 1x, 4x and 16x of ``docs`` (default
+400, what ``curate_dedup`` stages), each size as one Arrow batch. It
+times the gopher gram masses (``_gopher_mass_rows`` against the frozen
+per-row body ``ops_reference.gopher_masses``) and the MinHash lane minima
+(``_minhash_lane_minima`` against ``ops_reference.minhash_sig``, k = 5,
+over the texts cleaned by ``clean_up_batch``), min of ``reps`` (default
+3), checks the two forms agree, and prints JSON with the fit
+``t = a + b * rows`` of each form.
 """
 
 from __future__ import annotations
@@ -289,6 +301,43 @@ def _assess_ladder(turns: int, reps: int) -> dict:
             "batch_rows": ASSESS_BATCH_ROWS, "sizes": sizes, "fits": fits}
 
 
+def _kernels_ladder(docs: int, reps: int) -> dict:
+    sys.path.insert(0, str(REPO / "tests"))
+    import ops_reference as ref
+
+    from lingua_spark.core.text import clean_up_batch
+    from lingua_spark.ops.queries import _gopher_mass_rows, _minhash_lane_minima
+    from perfbench.inputs import documents
+
+    def masses_batch(rows):
+        masses, has = _gopher_mass_rows(rows)
+        return [tuple(m) if h else (None,) * len(m)
+                for m, h in zip(masses.tolist(), has.tolist())]
+
+    sizes = []
+    for mult in (1, 4, 16):
+        rows = list(documents(docs * mult, seed=1)["text"])
+        cleaned = clean_up_batch(rows)[0]
+        ks = [5] * len(rows)
+        forms = {
+            "gopher_masses": (lambda: masses_batch(rows),
+                              lambda: ref.gopher_masses(rows)),
+            "minhash": (lambda: _minhash_lane_minima(cleaned, ks),
+                        lambda: ref.minhash_sig(cleaned, ks)),
+        }
+        size = {"rows": len(rows)}
+        for name, (batch, per_row) in forms.items():
+            t_batch, got = _min_time(batch, reps)
+            t_row, want = _min_time(per_row, reps)
+            assert got == want, name
+            size[f"{name}.batch_s"] = round(t_batch, 4)
+            size[f"{name}.per_row_s"] = round(t_row, 4)
+        sizes.append(size)
+
+    fits = {k[:-2]: _fit(sizes, k) for k in sizes[0] if k.endswith("_s")}
+    return {"mode": "kernels", "reps": reps, "sizes": sizes, "fits": fits}
+
+
 def _detect_callers(turns: int, reps: int) -> dict:
     import hashlib
     import statistics
@@ -418,6 +467,11 @@ def main() -> None:
         turns = int(sys.argv[2]) if len(sys.argv) > 2 else 3000
         reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
         print(json.dumps(_rules_ladder(turns, reps)))
+        return
+    if mode == "kernels":
+        docs = int(sys.argv[2]) if len(sys.argv) > 2 else 400
+        reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+        print(json.dumps(_kernels_ladder(docs, reps)))
         return
     if mode == "assess":
         turns = int(sys.argv[2]) if len(sys.argv) > 2 else 3000

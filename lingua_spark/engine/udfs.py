@@ -18,6 +18,7 @@ BENCH/BASELINE.md, "Per-task Python worker setup".
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 import zipimport
@@ -163,15 +164,44 @@ def build_package_zip(dest: str | None = None) -> str:
     return str(dest)
 
 
+def _remove_when_stopped(sc, path: str) -> None:
+    """Remove ``path`` when ``sc`` stops (``sc.stop()``, which
+    ``SparkSession.stop()`` calls) or at interpreter exit, whichever comes
+    first. Executors fetch an added file from the driver for as long as
+    the context runs, so it cannot go earlier."""
+
+    def remove() -> None:
+        try:
+            os.remove(path)
+        except FileNotFoundError:
+            pass
+
+    atexit.register(remove)
+    stop = sc.stop
+
+    def stop_then_remove() -> None:
+        try:
+            stop()
+        finally:
+            remove()
+            atexit.unregister(remove)
+
+    sc.stop = stop_then_remove
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make ``lingua_spark`` importable on executor Python workers even when
     the driver runs from another cwd: zip the package and addPyFile it —
     the programmatic equivalent of ``spark-submit --py-files`` (north rule).
-    Idempotent per SparkContext."""
+    Idempotent per SparkContext. The zip is a temp file owned by the
+    context: it is removed when the context stops, or at interpreter exit
+    if that comes first (``_remove_when_stopped``)."""
     sc = spark.sparkContext
     if getattr(sc, "_lingua_spark_shipped", False):
         return
-    sc.addPyFile(build_package_zip())
+    path = build_package_zip()
+    _remove_when_stopped(sc, path)
+    sc.addPyFile(path)
     sc._lingua_spark_shipped = True
 
 

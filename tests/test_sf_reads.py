@@ -2,7 +2,10 @@
 unchanged file reuses the schema Spark inferred the first time, so it
 launches no job; anything that could change the inferred schema (a
 rewritten file, another sf dir, a parquet inference setting) is
-inferred afresh, and ``register_views`` still replaces every view."""
+inferred afresh. ``register_views`` keeps a view it made while the
+view's file is unchanged and the session still holds that very view;
+a rewritten file, another sf dir, a view registered or dropped by hand
+and a new session each get a new view."""
 
 import os
 
@@ -89,6 +92,50 @@ def test_rewritten_file_is_inferred_afresh(spark, tmp_path):
         "SELECT count(*) AS n, sum(extra - 3 * doc_id) AS z FROM documents"
     ).collect()[0]
     assert (got.n, got.z) == (docs.num_rows, 0)
+
+
+def test_unchanged_views_are_reused(spark):
+    from lingua_spark.ops.queries import TABLES, register_views
+
+    sf_dir = SF_DIRS[0]
+    register_views(spark, SF_DIRS[1])
+    assert register_views(spark, sf_dir) == TABLES
+    before = spark.table("documents").count()
+    made, jobs = _jobs_in(spark, "sf-views-reused",
+                          lambda: register_views(spark, sf_dir))
+    assert made == [] and jobs == []
+    assert spark.table("documents").count() == before
+
+
+@pytest.mark.parametrize("how", ["by_hand", "dropped"])
+def test_view_changed_by_hand_is_restored(spark, how):
+    from lingua_spark.ops.queries import register_views
+
+    sf_dir = SF_DIRS[0]
+    register_views(spark, sf_dir)
+    want = spark.table("documents").count()
+    if how == "by_hand":
+        spark.createDataFrame([(0, "x")], ["doc_id", "text"]) \
+            .createOrReplaceTempView("documents")
+        assert spark.table("documents").count() == 1
+    else:
+        assert spark.catalog.dropTempView("documents")
+    assert register_views(spark, sf_dir) == ["documents"]
+    assert spark.table("documents").count() == want
+    assert register_views(spark, sf_dir) == []
+
+
+def test_new_session_gets_its_own_views(spark):
+    from lingua_spark.ops.queries import TABLES, register_views
+
+    sf_dir = SF_DIRS[0]
+    register_views(spark, sf_dir)
+    other = spark.newSession()
+    assert not other.catalog.tableExists("documents")
+    assert register_views(other, sf_dir) == TABLES
+    assert other.table("documents").count() == spark.table("documents").count()
+    assert register_views(other, sf_dir) == []
+    assert register_views(spark, sf_dir) == []
 
 
 def test_second_sf_dir_replaces_views(spark):

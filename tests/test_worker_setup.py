@@ -128,3 +128,58 @@ def test_package_kernel_installs_guard_in_its_worker(spark):
     rows = spark.range(0, 4, numPartitions=1).select(
         guarded("id").alias("g")).collect()
     assert [r.g for r in rows] == [True] * 4
+
+
+_SHIP_AND_END = """
+import glob, json, os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from lingua_spark.engine.pipeline import build_session
+from lingua_spark.engine.udfs import ship_package
+
+spark = build_session(app="ship-and-end", master="local[1]",
+                      shuffle_partitions=1)
+ship_package(spark)
+pattern = os.path.join(tempfile.gettempdir(), "lingua_spark_*.zip")
+shipped = glob.glob(pattern)
+# a task on an executor fetches the zip and imports the package from it
+rows = (spark.range(0, 2, numPartitions=1)
+        .select(F.pandas_udf(lambda s: s.map(
+            lambda _: __import__("lingua_spark").__file__), "string")("id"))
+        .collect())
+print(json.dumps({{"shipped": shipped, "on_worker": rows[0][0]}}), flush=True)
+if {stop}:
+    spark.stop()
+    print(json.dumps({{"after_stop": glob.glob(pattern)}}), flush=True)
+"""
+
+
+@pytest.mark.parametrize("stop", [True, False], ids=["stop", "exit"])
+def test_shipped_zip_is_removed_when_its_context_ends(tmp_path, stop):
+    """``ship_package`` writes the package zip to the temp dir; stopping
+    the session removes it, and so does an interpreter exit without a
+    stop. The zip is in place while the context runs: an executor task
+    imports ``lingua_spark`` from it."""
+    import json
+    import os
+    import subprocess
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    r = subprocess.run(
+        [sys.executable, "-c",
+         _SHIP_AND_END.format(repo=str(repo), stop=stop)],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path),
+        env={**os.environ, "TMPDIR": str(tmp)},
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    lines = [json.loads(x) for x in r.stdout.splitlines()
+             if x.startswith("{")]
+    shipped = lines[0]["shipped"]
+    assert len(shipped) == 1 and shipped[0].startswith(str(tmp)), shipped
+    assert ".zip" in lines[0]["on_worker"], lines[0]
+    if stop:
+        assert lines[1]["after_stop"] == []
+    assert list(tmp.glob("lingua_spark_*.zip")) == []
