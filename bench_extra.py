@@ -15,6 +15,7 @@ Usage:
     python bench_extra.py detect [turns] [reps]  # per-text detector callers
     python bench_extra.py setup [reps]           # model set-up split
     python bench_extra.py kernels [docs] [reps]  # ops-kernel size ladder
+    python bench_extra.py cc [reps]              # connected-components ledger
 
 Timing policy matches bench.py: one warm-up pass, then ``reps`` timed
 noop-sink passes (min + all samples reported). Data dir / cores from
@@ -78,6 +79,18 @@ per-row body ``ops_reference.gopher_masses``) and the MinHash lane minima
 over the texts cleaned by ``clean_up_batch``), min of ``reps`` (default
 3), checks the two forms agree, and prints JSON with the fit
 ``t = a + b * rows`` of each form.
+
+``cc`` is the connected-components ledger of the three registry entries
+that cluster a pair graph (``dedup_minhash_cc``, ``conv_minhash_cc``,
+``dedup_embedding_cc``) on $SPARK_GRAFT_SF_DIR. After one warm-up pass
+per entry, each of ``reps`` (default 3) noop-sink passes records the
+``stats`` its ``connected_components`` call filled (``rounds``,
+``changed``) and its phases in wall seconds: ``before_cc_s`` (views and
+pairs planning), ``init_s`` (the edge cache and initial checkpoint,
+which run the pairs plan), ``pass_s`` (per E-sized pass, the settle
+count then the pointer jumps and checkpoint, null on the settling pass)
+and ``output_s`` (the caller's output join, run by the sink).
+``$PYTHONPATH`` selects the checkout as for ``detect``.
 """
 
 from __future__ import annotations
@@ -146,6 +159,59 @@ def _job_ledger(spark, group: str) -> dict:
     by_site = Counter(j["call_site"].split(" at ")[0] for j in jobs)
     return {"jobs": jobs, "n_jobs": len(jobs),
             "by_call_site": dict(by_site.most_common())}
+
+
+CC_ENTRIES = ("dedup_minhash_cc", "conv_minhash_cc", "dedup_embedding_cc")
+
+
+def _cc_ledger(spark, reps: int) -> dict:
+    from __spark_entry__ import queries
+    from lingua_spark.ops import graph
+
+    real, calls = graph.connected_components, []
+
+    def traced(*args, **kwargs):
+        stats: dict = {}
+        t0 = time.perf_counter()
+        out = real(*args, stats=stats, **kwargs)
+        calls.append({"cc_s": time.perf_counter() - t0, **stats})
+        return out
+
+    def r3(x):  # seconds, or lists of them; None where a phase did not run
+        if isinstance(x, list):
+            return [r3(v) for v in x]
+        return None if x is None else round(x, 3)
+
+    # the entries import connected_components from the module per call
+    graph.connected_components = traced
+    try:
+        out = {}
+        for name in CC_ENTRIES:
+            fn = queries()[name]
+            _noop(fn(spark, SF_DIR))  # warm-up
+            passes = []
+            for _ in range(reps):
+                calls.clear()
+                t0 = time.perf_counter()
+                df = fn(spark, SF_DIR)
+                t1 = time.perf_counter()
+                _noop(df)
+                t2 = time.perf_counter()
+                (cc,) = calls
+                passes.append({
+                    "wall_s": r3(t2 - t0), "rounds": cc["rounds"],
+                    "changed": cc["changed"],
+                    "before_cc_s": r3(t1 - t0 - cc["cc_s"]),
+                    "cc_s": r3(cc["cc_s"]),
+                    "init_s": r3(cc.get("init_s")),
+                    "pass_s": r3(cc.get("pass_s")),
+                    "output_s": r3(t2 - t1),
+                })
+            out[name] = passes
+    finally:
+        graph.connected_components = real
+    return {"mode": "cc", "sf_dir": SF_DIR,
+            "package": str(Path(graph.__file__).parents[2]), "entries": out}
 
 
 def _min_time(fn, reps: int):
@@ -483,6 +549,10 @@ def main() -> None:
         from __spark_entry__ import queries
 
         print("\n".join(queries()))
+        return
+    if mode == "cc":
+        reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+        print(json.dumps(_cc_ledger(spark, reps)))
         return
     if mode == "sql":
         from lingua_spark.ops.queries import register_views

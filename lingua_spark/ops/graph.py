@@ -23,6 +23,24 @@ This is the standard large-star/small-star contraction family
 expressed as DataFrame joins: every step is a hash join + groupBy-min —
 shuffle-parallel, no driver-side graph state, O(E) work per round.
 
+Settle test: each round counts the nodes its NEIGHBOUR step moved, and
+returns before the pointer jumps when that count is 0. This is exact:
+
+- labels are always ids of nodes in the same component, and
+  ``rep(u) <= u`` (every step takes a min that includes the old label);
+- if the neighbour step moves nothing, ``rep(u) <= rep(v)`` holds on
+  every edge in both orientations, so labels are constant on each
+  component; that constant is a member no larger than any member, i.e.
+  the component's min, and the jumps would move nothing either;
+- conversely, a round whose jumps move nothing had a neighbour step that
+  moved nothing (jumps only lower labels further).
+
+So the loop runs the same number of E-sized rounds as counting after the
+jumps would, but the settling round costs one count job: no jump joins,
+no checkpoint. A graph already settled at initialization (disjoint
+cliques, stars centred on their min id) returns after one round and one
+checkpoint.
+
 Each round's label table is checkpointed: materialized with its lineage
 truncated, so plans stay constant-size instead of growing by two joins
 per round. TWO checkpoint backends (VERDICT r03 item 2):
@@ -47,6 +65,8 @@ directory) after consuming/writing the result.
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -98,22 +118,25 @@ def connected_components(
     """(src, dst) undirected edge list -> (doc, rep): every node mapped to
     the minimum node id of its connected component.
 
-    Deterministic (min over ids). Raises RuntimeError if not converged
-    within ``max_iters`` rounds — loud failure instead of a silently
-    wrong clustering (with pointer jumping, 25 rounds covers component
-    diameters up to ~2^25). ``checkpoint_dir``: when set, per-round label
-    tables are reliably checkpointed there (executor-loss-safe; see
-    module docstring for the retention/restore contract); when None,
-    ``localCheckpoint`` is used. ``stats``: optional dict the call fills
-    with convergence diagnostics — ``rounds`` (E-sized join rounds run,
-    including the final all-stable confirmation round) and ``changed``
-    (per-round count of relabeled nodes) — so tests and 100 TB operators
-    can pin the O(log diameter) compression instead of inferring it.
+    Edges may repeat, in either orientation, and may be self-loops: a
+    repeat costs work, not correctness. Deterministic (min over ids).
+    Raises RuntimeError if not converged within ``max_iters`` rounds —
+    loud failure instead of a silently wrong clustering (with pointer
+    jumping, 25 rounds covers component diameters up to ~2^25).
+    ``checkpoint_dir``: when set, per-round label tables are reliably
+    checkpointed there (executor-loss-safe; see module docstring for the
+    retention/restore contract); when None, ``localCheckpoint`` is used.
+    No cache the call makes outlives it. ``stats``: optional dict the
+    call fills with diagnostics, so tests and 100 TB operators can pin
+    the O(log diameter) compression: ``rounds`` (E-sized rounds, the
+    settling one included), ``changed`` (per round, nodes the neighbour
+    step moved; ends in 0), ``init_s`` (initial checkpoint, which runs
+    the edges plan) and ``pass_s`` (per round, ``[count, jumps +
+    checkpoint]``; None on the settling round), in wall seconds.
     """
     spark = edges.sparkSession
-    gc = None
-    prev_ckpt_dir = None
-    restore_dir = None
+    t0 = time.perf_counter()
+    gc = prev_ckpt_dir = restore_dir = mid = None
     if checkpoint_dir is not None:
         import uuid
 
@@ -121,9 +144,8 @@ def connected_components(
         # save the context's previous checkpoint dir so this call does
         # not hijack the global setting for the rest of the session
         # (restored via the Scala var setter in the finally below)
-        prev_opt = sc._jsc.sc().getCheckpointDir()
+        prev_ckpt_dir = sc._jsc.sc().getCheckpointDir()
         restore_dir = getattr(sc._jsc.sc(), "checkpointDir_$eq")
-        prev_ckpt_dir = prev_opt
         # per-CALL unique subdirectory: two concurrent
         # connected_components calls sharing the context dir would see
         # each other's rdd-* directories in the GC's before/after diff
@@ -143,10 +165,11 @@ def connected_components(
             return out
         return df.localCheckpoint(eager=True)
 
+    prev_sp = spark.conf.get("spark.sql.shuffle.partitions", None)
     # BOTH edge orientations in ONE evaluation of the (potentially very
     # expensive — e.g. the full LSH pairs query) upstream plan: a
     # two-branch select+union would inline and evaluate it twice before
-    # the distinct materializes
+    # the edge cache materializes
     und = (
         edges.select(
             F.explode(
@@ -161,10 +184,8 @@ def connected_components(
             ).alias("e")
         )
         .select("e.u", "e.v")
-        .distinct()
         .persist()
     )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions", None)
     try:
         # initialization already applies the first neighbour-min: the
         # grouping that would otherwise only enumerate distinct nodes
@@ -176,32 +197,33 @@ def connected_components(
             .agg(F.least(F.col("u"), F.min("v")).alias("rep"))
             .select(F.col("u").alias("doc"), "rep")
         )
+        if stats is not None:
+            stats["init_s"] = time.perf_counter() - t0
         # SIZE-ADAPTIVE round partitioning (guide §2.2/§2.5): the label
         # tables are V-sized and every round runs ~5 tiny shuffles; a
         # session-wide shuffle.partitions tuned for corpus-sized
         # exchanges schedules hundreds of near-empty tasks per round
         # (measured ~45% of CC wall time at sf0.1). ``und`` is cached
-        # and AQE-coalesced by now, so its actual partition count IS
-        # the data-sized signal — huge edge sets keep a large count,
-        # small graphs drop to a handful. Restored in the finally.
+        # by now, so its actual partition count IS the data-sized
+        # signal — huge edge sets keep a large count, small graphs
+        # drop to a handful. Restored in the finally.
         try:
             n_round = max(2, und.rdd.getNumPartitions())
             spark.conf.set("spark.sql.shuffle.partitions", str(n_round))
         except Exception:  # noqa: BLE001 — keep the session value
             pass
         for _ in range(max_iters):
+            t0 = time.perf_counter()
             nbr = (
                 und.join(labels, und.v == labels.doc)
                 .groupBy("u")
                 .agg(F.min("rep").alias("nbr_rep"))
                 .select(F.col("u").alias("doc"), "nbr_rep")
             )
-            # persist (not eager-checkpoint) `mid`: it is the base AND
-            # both lookup sides of the pointer jumps below, so an
-            # unmarked plan would evaluate the neighbor-join + groupBy
-            # subtree three times (ADVICE r03); the cache materializes
-            # inside the `new` checkpoint's job — one job per round
-            # instead of two.
+            # persist `mid`: the settle count below fills the cache (the
+            # round's E-sized job), and the pointer jumps read it back as
+            # their base AND lookup side instead of re-running the
+            # neighbour join three times (ADVICE r03).
             mid = labels.join(nbr, "doc", "left").select(
                 "doc",
                 F.col("rep").alias("old_rep"),
@@ -209,45 +231,40 @@ def connected_components(
                     F.col("rep"), F.coalesce("nbr_rep", F.col("rep"))
                 ).alias("rep"),
             ).persist()
+            # settle test (module docstring)
+            moved = mid.filter(F.col("rep") != F.col("old_rep")).count()
+            t1 = time.perf_counter()
+            if stats is not None:
+                stats.setdefault("changed", []).append(moved)
+                stats["rounds"] = len(stats["changed"])
+                stats.setdefault("pass_s", []).append([t1 - t0, None])
+            if moved == 0:
+                return labels
             # DOUBLE pointer jump: adopt the label of the label, twice
             # (rep -> mid_rep^3 per round). Each extra hop is a join of
             # two V-sized label tables — far cheaper than the E-sized
             # neighbour join a whole extra round would cost, and it
             # compresses chain depth 3x per round instead of 2x.
-            # old_rep rides along so convergence is a filter+count over
-            # the checkpointed table — no extra labels join per round.
             hop = mid.select(
-                F.col("doc").alias("rep"), F.col("rep").alias("rep2")
+                F.col("doc").alias("rep"), F.col("rep").alias("hop_rep")
             )
-            j1 = mid.join(hop, "rep", "left").select(
-                "doc",
-                "old_rep",
-                F.least(
-                    F.col("rep"), F.coalesce("rep2", F.col("rep"))
-                ).alias("rep"),
-            )
-            hop2 = mid.select(
-                F.col("doc").alias("rep"), F.col("rep").alias("rep3")
-            )
-            new = ckpt(
-                j1.join(hop2, "rep", "left").select(
+
+            def jump(df: DataFrame) -> DataFrame:
+                return df.join(hop, "rep", "left").select(
                     "doc",
-                    "old_rep",
                     F.least(
-                        F.col("rep"), F.coalesce("rep3", F.col("rep"))
+                        F.col("rep"), F.coalesce("hop_rep", F.col("rep"))
                     ).alias("rep"),
                 )
-            )
-            changed = new.filter(F.col("rep") != F.col("old_rep")).count()
+
+            labels = ckpt(jump(jump(mid)))
             mid.unpersist()
-            labels = new.select("doc", "rep")
             if stats is not None:
-                stats.setdefault("changed", []).append(changed)
-                stats["rounds"] = len(stats["changed"])
-            if changed == 0:
-                return labels
+                stats["pass_s"][-1][1] = time.perf_counter() - t1
     finally:
         und.unpersist()
+        if mid is not None:
+            mid.unpersist()
         if prev_sp is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         if restore_dir is not None:

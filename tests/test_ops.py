@@ -1001,11 +1001,13 @@ def test_connected_components_chain_depth_log_compressed(spark, tmp_path):
     }
     assert len(labels) == depth + 1
     assert set(labels.values()) == {0}, "chain must collapse to rep 0"
-    # includes the final changed==0 confirmation round; 2^10 diameter
-    # must NOT cost anywhere near 2^10 rounds
+    # counts every E-sized neighbour pass, including the settling one
+    # (its neighbour step moved nothing, so it ran no pointer jumps);
+    # 2^10 diameter must NOT cost anywhere near 2^10 passes
     assert stats["rounds"] <= 10, stats
-    # compression is monotone until convergence: last round changes 0
+    # every pass but the settling one moved a node; the settling one 0
     assert stats["changed"][-1] == 0, stats
+    assert all(c > 0 for c in stats["changed"][:-1]), stats
 
 
 def test_connected_components_random_graph_matches_union_find(spark):
